@@ -50,10 +50,6 @@ from concurrent.futures import ThreadPoolExecutor
 WARM_RUNS = 3
 
 
-def _cpus() -> int:
-    """The driver's core-count knob (also drives Spark's master)."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-
 try:  # sampled at import, before any engine starts
     _LOAD_AT_START = round(os.getloadavg()[0], 2)
 except OSError:  # platform without getloadavg
@@ -61,6 +57,8 @@ except OSError:  # platform without getloadavg
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
+
+from gaming_ai_analytics_spark.session import cpus  # noqa: E402
 
 #: Representative heavy paths across the operator surface.
 HEADLINE = [
@@ -144,7 +142,7 @@ def duckdb_totals(
     # r14: honor the driver's core-count knob in the comparator too —
     # a hardcoded 32 made the c8 run's DuckDB twins a 32-core
     # comparator against 8-core Spark (VERDICT r13 "what's wrong" #6)
-    con.execute(f"SET threads={_cpus()}")
+    con.execute(f"SET threads={cpus()}")
     for t in _DUCK_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     for name in names:  # cold
@@ -201,11 +199,12 @@ def _parse_duck_child_stdout(
     return None, (partial or None), True
 
 
-def _sf1_dir() -> str | None:
+def _sf1_dir(errors: dict[str, str]) -> str | None:
     """The derived 10× scale-up of sf0.1 (tools/make_scaled_sf.py) —
     the regime where per-query scheduling floors amortize and the
     engine ratio reflects data-proportional work (BASELINE.md §3).
-    Built on first use; opt out with SPARK_GRAFT_SF1=0."""
+    Built on first use (a failed build lands in ``errors["sf1_error"]``);
+    opt out with SPARK_GRAFT_SF1=0."""
     if os.environ.get("SPARK_GRAFT_SF1", "1") == "0":
         return None
     out = os.path.join(REPO, ".benchdata", "sf1")
@@ -215,7 +214,8 @@ def _sf1_dir() -> str | None:
             from make_scaled_sf import make_scaled
 
             make_scaled("/root/testdata/sf0.1", out, 10)
-        except Exception:
+        except Exception as e:
+            errors["sf1_error"] = repr(e)
             return None
     return out
 
@@ -264,8 +264,11 @@ def main() -> None:
     except OSError:
         load_after_settle = None
 
+    # "<tier>_error" -> repr of the exception that cost that tier, so a
+    # crashed tier reads differently from an absent one
+    errors: dict[str, str] = {}
     at_default_sf = sf_dir.rstrip("/").endswith("sf0.1")
-    sf1_dir = _sf1_dir() if at_default_sf else None
+    sf1_dir = _sf1_dir(errors) if at_default_sf else None
 
     # DuckDB first, before the Spark JVM exists: measured in-process
     # after Spark, the resident JVM inflates DuckDB ~30% — that bias
@@ -275,13 +278,15 @@ def main() -> None:
         duck_seq, duck_conc, duck_queries = duckdb_totals(
             sf_dir, registry.oracle_sql()
         )
-    except Exception:
+    except Exception as e:
+        errors["duckdb_error"] = repr(e)
         duck_seq = duck_conc = duck_queries = None
     try:  # tier 2 twins, same no-JVM conditions; failure costs only tier 2
         duck2_seq, _, duck2_queries = duckdb_totals(
             sf_dir, registry.oracle_sql(), names=TIER2, concurrent=False
         )
-    except Exception:
+    except Exception as e:
+        errors["tier2_duckdb_error"] = repr(e)
         duck2_seq = duck2_queries = None
 
     spark = get_spark("bench")
@@ -319,7 +324,8 @@ def main() -> None:
                 ex.map(lambda n: materialize(qs[n](spark, sf_dir)), HEADLINE)
             )
         concurrent_wall = round(time.perf_counter() - t0, 3)
-    except Exception:
+    except Exception as e:
+        errors["concurrent_error"] = repr(e)
         concurrent_wall = None
 
     # tier 2 (sequential only — the concurrency view stays tier-1 for
@@ -336,7 +342,8 @@ def main() -> None:
                 materialize(qs[name](spark, sf_dir))
                 runs.append(time.perf_counter() - t0)
             tier2_timings[name] = round(statistics.median(runs), 3)
-    except Exception:
+    except Exception as e:
+        errors["tier2_error"] = repr(e)
         tier2_timings = None
 
     # sf1 row: cold + MEDIAN of three warm runs per query (r13: the
@@ -362,7 +369,8 @@ def main() -> None:
                     materialize(fn(spark, sf1_dir))
                     runs.append(time.perf_counter() - t0)
                 sf1_timings[name] = round(statistics.median(runs), 3)
-        except Exception:
+        except Exception as e:
+            errors["sf1_error"] = repr(e)
             sf1_timings = None
     # tier 2 keeps the single warm run: its sf1 entries run 2–115 s,
     # long enough to average a steal burst out within the run, and
@@ -378,7 +386,8 @@ def main() -> None:
                 t0 = time.perf_counter()
                 materialize(fn(spark, sf1_dir))
                 sf1_tier2[name] = round(time.perf_counter() - t0, 3)
-        except Exception:
+        except Exception as e:
+            errors["sf1_tier2_error"] = repr(e)
             sf1_tier2 = None
 
     # sf10 tier (r14): one cold + one timed warm run per query, no
@@ -404,7 +413,8 @@ def main() -> None:
                 t0 = time.perf_counter()
                 sink(fn(spark, sf10_dir))
                 sf10_timings[name] = round(time.perf_counter() - t0, 3)
-        except Exception:
+        except Exception as e:
+            errors["sf10_error"] = repr(e)
             sf10_timings = None
 
     # DuckDB sf1 LAST, in a SUBPROCESS. Measured in-process before the
@@ -445,14 +455,16 @@ def main() -> None:
             duck_sf1, duck_sf1_queries, duck_sf1_partial = duck_child(
                 "--duck-sf1"
             )
-        except Exception:
+        except Exception as e:
+            errors["sf1_duckdb_error"] = repr(e)
             duck_sf1 = duck_sf1_queries = None
             duck_sf1_partial = False
         try:  # separate child: a tier-2 timeout must not cost tier 1
             duck_sf1_t2, duck_sf1_t2_queries, duck_sf1_t2_partial = (
                 duck_child("--duck-sf1-t2")
             )
-        except Exception:
+        except Exception as e:
+            errors["sf1_tier2_duckdb_error"] = repr(e)
             duck_sf1_t2 = duck_sf1_t2_queries = None
             duck_sf1_t2_partial = False
 
@@ -535,6 +547,7 @@ def main() -> None:
     if sf10_timings:
         out["sf10_total_warm"] = round(sum(sf10_timings.values()), 3)
         out["sf10_queries"] = sf10_timings
+    out.update(errors)
     try:  # end-of-run load closes the contamination bracket
         out["load_avg_end"] = round(os.getloadavg()[0], 2)
     except OSError:
@@ -584,7 +597,7 @@ def duck_sf1_child(sf1_dir: str, names: list[str] | None = None) -> None:
     sql = dict(oracles)
     sql["similarity_topk_lsh"] = sql["similarity_topk"]  # exact twin
     con = duckdb.connect()
-    con.execute(f"SET threads={_cpus()}")  # r14: honor the driver knob
+    con.execute(f"SET threads={cpus()}")
     for t in _DUCK_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf1_dir}/{t}.parquet'"

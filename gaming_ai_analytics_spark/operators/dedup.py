@@ -1783,6 +1783,13 @@ def remove_duplicate_spans(
             ).otherwise(_empty),
         )
     )
+    # Safe only through CaseWhen laziness: on the empty-starts path
+    # (_m == 0, the null-join docs) `slice(_S, 2, _m - 1)` gets a
+    # negative length, which always raises, and `element_at(_S, 1)` is
+    # out of bounds, which raises under ANSI mode. Both live in
+    # `_head`/`_gaps`, i.e. only in the `otherwise` branch below, which
+    # CaseWhen never evaluates when `_m == 0`. Keep them there
+    # (test_span_removal_interval_complement_edges pins it, ANSI on).
     kept_pos = F.when(_m == 0, F.sequence(F.lit(0), _n - 1)).otherwise(
         F.concat(_head, _gaps)
     )

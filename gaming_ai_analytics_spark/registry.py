@@ -5,8 +5,9 @@ with an ANSI-SQL oracle string DuckDB runs on the same parquet tables
 (driver contract in ``__spark_entry__.py``). Column names and rounding
 are aligned on both sides so the order-insensitive value hash matches.
 
-Non-SQL-expressible operators (LSH dedup internals, streaming) register
-a query with no oracle → the driver records a rows-only check.
+``tests/test_registry.py::test_query_matches_oracle`` runs every entry
+against its oracle at sf0.01, so a query registered without one fails
+tier-1.
 """
 
 from __future__ import annotations
@@ -31,21 +32,20 @@ def register(name: str, fn: QueryFn, oracle: str | None) -> None:
 
 
 def queries() -> dict[str, QueryFn]:
-    _apply_driver_window()
+    """Every registered query, in registration order."""
     return {name: fn for name, (fn, _) in _REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    _apply_driver_window()
+    """The DuckDB oracle of every query that has one."""
     return {name: sql for name, (_, sql) in _REGISTRY.items() if sql is not None}
 
 
 def oracle_for(name: str) -> str | None:
-    """Raw oracle lookup for intra-package reuse.
+    """One query's oracle, for reuse by another query module.
 
-    Safe to call from a query module's body during ``_load_all`` —
-    unlike ``oracle_sql`` it does not validate/reorder the (possibly
-    still half-built) registry.
+    Safe to call from a query module's body during ``_load_all``: it
+    reads only ``name``'s own entry of the still half-built registry.
     """
     return _REGISTRY[name][1]
 
@@ -63,524 +63,6 @@ def _load_all() -> None:
     from gaming_ai_analytics_spark import queries_traindata  # noqa: F401
     from gaming_ai_analytics_spark import queries_analytics  # noqa: F401
     from gaming_ai_analytics_spark import queries_warehouse  # noqa: F401
-
-
-#: The driver's correctness pass checks the FIRST 50 entries of
-#: ``queries()`` iteration order.  Registration order is import order,
-#: which drifts as modules grow — round 2 proved that nine new core/ext
-#: registrations silently evicted the entire extension ladder from the
-#: checked window.  So the window is pinned EXPLICITLY: these names are
-#: moved to the front (in this order) after all modules register.
-#:
-#: ROUND-14 COMPOSITION (rotation at round start, the r6 discipline:
-#: fresh r13-green names out, stale names in).  Exactly the r13
-#: backlog's pre-planned order: the 39 r11-green core-tier names and
-#: the frozen agg_rollup that crossed (or ride along with) their caps
-#: when CORRECTNESS_r14 lands, then the r7-green stable fillers the
-#: r13 window could not seat (due r17, taken early for slack).  No
-#: new operators this round (optimization round — surface frozen).
-DRIVER_WINDOW: tuple[str, ...] = (
-    # -- r11-green core tier + agg_rollup (40 names, due at r14) ------
-    "agg_rollup",
-    "agg_scale_sketches",
-    "agg_winsorized_stats",
-    "bpe_apply_saved_vocab",
-    "bpe_fertility_by_lang",
-    "chunk_dedup_clean",
-    "contamination_span_lengths",
-    "corpus_pair_overlap",
-    "decontaminate_eval_overlap",
-    "decontaminate_fuzzy",
-    "decontaminate_fuzzy_incremental",
-    "dedup_cluster_assign",
-    "dedup_embedding_cosine",
-    "dedup_exact_canonical",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dsir_importance_weights",
-    "duplicate_ngram_spans",
-    "duplicate_span_removal",
-    "events_sliding_window",
-    "events_stream_stream_left_join",
-    "events_streaming_dedupe",
-    "events_streaming_dedupe_ttl",
-    "events_streaming_matview_upsert",
-    "events_streaming_stateful_totals",
-    "events_streaming_static_join",
-    "events_tumbling_hourly",
-    "export_shards",
-    "join_null_safe",
-    "metric_view_curation",
-    "mixture_bpe_budget",
-    "multimodal_frame_sample",
-    "packing_bpe_budget",
-    "pii_redact",
-    "python_datasource_scan",
-    "sql_ai_functions",
-    "temporal_embargo_split",
-    "tf_idf",
-    "traindata_curation_pipeline",
-    "zorder_key_events",
-    # -- r7-green stable fillers (due r17; taken early) ----------------
-    "agg_incremental_merge",
-    "agg_sketch_rollup",
-    "latest_event_per_user",
-    "window_forward_fill",
-    "window_value_range_frame",
-    "anomaly_zscore",
-    "retention_cohorts",
-    "funnel_conversion",
-    "quality_repetition",
-    "sample_stratified",
-)
-
-#: Everything still owed a fresh driver row AFTER this round's window,
-#: pre-ordered as the r15 window plan.  Composition — count it from
-#: the list, not this comment (ADVICE r9): the 31 r12-green core-tier
-#: names that cross the 3-round core cap the moment CORRECTNESS_r15
-#: lands, then the one r7-green stable filler the r14 window could
-#: not seat (due r17).
-#: r14 TIER-SLACK EXECUTION: of the staged "r7-green filler cohort on
-#: its third green" promotion, only pivot_lang_counts and doc_chunking
-#: actually reached 3 committed greens when CORRECTNESS_r13 landed
-#: (the cohort's other members carry greens from r7/r13 only — their
-#: r3 rows predate their registration), plus pareto_revenue_share
-#: (greens r3/r7/r13).  All three moved stable→FROZEN_TIER below;
-#: demand stays 47/50 (the ceil boundaries do not move at |stable|
-#: 106→103) but the promotion absorbs three future registrations
-#: before the stable ceil bumps.  The next real demand relief remains
-#: `curation_funnel_v2` core→stable once CORRECTNESS_r15 gives it a
-#: second green round.
-ROTATION_BACKLOG: tuple[str, ...] = (
-    # r12-green core tier (stale when CORRECTNESS_r15 lands)
-    "audience_overlap_sketch",
-    "blocking_snm_candidates",
-    "curation_funnel_v2",
-    "dedup_containment",
-    "dedup_incremental_index",
-    "dedup_semantic",
-    "dedup_simhash_pairs",
-    "events_session_window",
-    "events_stream_stream_join",
-    "events_streaming_rate_alert",
-    "events_streaming_session",
-    "events_streaming_tumbling",
-    "fact_build_transform",
-    "flagship_star_metrics",
-    "frequent_itemset_pairs",
-    "inverted_index_postings",
-    "join_salted_skew",
-    "join_skew_isolated",
-    "lm_perplexity_score",
-    "multimodal_features",
-    "multimodal_resize",
-    "pagerank_trade_graph",
-    "pit_dim_join",
-    "quality_classifier_distill",
-    "quality_psi_drift",
-    "sample_weighted",
-    "similarity_topk",
-    "text_analysis_profile",
-    "traindata_curation_v2",
-    "traindata_sequence_packing",
-    "triangle_count_parts",
-    # r7-green stable filler the r14 window could not seat (due r17)
-    "vocab_top_terms",
-)
-
-#: --- Rotation tiers (VERDICT r7 ask #2) -------------------------------
-#:
-#: The staleness-cap arithmetic: at 207 registered names and a 50-slot
-#: window, one flat re-proof cycle takes ceil(207/50) = 5 rounds, so a
-#: single 3-round cap is arithmetically unsatisfiable at steady state —
-#: the backlog would absorb the remainder forever and the cap would
-#: assert only "the bookkeeping list was updated".  The registry is
-#: therefore TIERED:
-#:
-#:   * CORE_TIER (the frozenset below): every SURVEY §2
-#:     reference-mapped operator (scans/sinks, projection/filter/
-#:     scalar/sort surfaces, the join and aggregation ladders, the UDF
-#:     ladder, metric views, the pipeline) plus the heavy
-#:     dedup/ANN/graph/streaming/train-data paths — the operators whose
-#:     plans carry real risk.  Re-proved within CORE_STALENESS_CAP
-#:     rounds.
-#:   * stable tier (every other registered name): single-expression
-#:     language surfaces and analytics rollups whose plans have not
-#:     changed since their last green row.  Re-proved within
-#:     STALENESS_CAP_STABLE rounds, under a SOURCE-HASH GUARD: each
-#:     stable name's query-function source hash is recorded in
-#:     ``tests/stable_plan_hashes.json``; any change to the function
-#:     re-promotes the name to the core cap until a fresh green row
-#:     lands and the hash is re-recorded (tools/update_stable_hashes.py).
-#:     Never-checked names are overdue regardless of tier.
-#:   * FROZEN_TIER (r10, defined above with its membership criteria):
-#:     byte-stable single-expression surfaces with >=3 committed green
-#:     rounds — same hash-guard mechanics as stable, 25-round cadence.
-#:
-#: Satisfiability (asserted by tests/test_registry.py, which
-#: RECOMPUTES the demand from the live registry — the authoritative
-#: numbers live in that test's output, not here).  At the start-of-r9
-#: registry (218 names, |core|=102, |stable|=116) the per-round slot
-#: demand is ceil(102/3) + ceil(116/10) = 34 + 12 = 46 ≤ 50, leaving
-#: 4 slots of slack for r9 growth (VERDICT r8 ask #2: the previous
-#: 8-round stable cap put demand at 49/50, one core operator from the
-#: bound).  The stable cap can be this long precisely because of the
-#: source-hash guard: a stable name is only on the long leash while
-#: its value-defining source is byte-identical to what was last
-#: proved green — any edit re-promotes it to the 3-round core cap.
-#: A flat 3-round cap would demand ceil(218/3) = 73 > 50.
-CORE_STALENESS_CAP = 3
-STALENESS_CAP_STABLE = 10
-STALENESS_CAP_FROZEN = 25
-
-#: --- FROZEN tier (r10 — the third tier VERDICT r8 sketched and r9
-#: ask #6 commissioned) -------------------------------------------------
-#:
-#: Names whose plans are single-expression surfaces over one or two
-#: fixture tables (a scan, a filter stack, one equi-join, one groupBy
-#: aggregate, a schema-pinned format round-trip) that have been
-#: byte-identical since round 5 and carry at least THREE committed
-#: green driver rounds each (history asserted by
-#: tests/test_registry.py::test_frozen_tier_membership_is_earned).
-#: They stay hash-guarded exactly like the stable tier — any edit to
-#: the function, its oracle, or a shared value helper demotes the
-#: name to the 3-round core cap until re-proved — but their scheduled
-#: re-check cadence is STALENESS_CAP_FROZEN rounds: for a value-hash-
-#: guarded, never-edited single-expression plan, a failed re-check
-#: could only come from an engine or fixture change, which would also
-#: fail the ~80 windowed names around it.  The cap is long, not
-#: infinite, so every name still cycles through real driver evidence.
-#:
-#: Arithmetic this buys (recomputed by the satisfiability test): each
-#: name below costs 1/10 slot/round in stable (1/3 in core) but 1/25
-#: here — the r10 tier (22 names) plus the r11 promotion (17 names)
-#: holds steady-state demand at 44 slots vs the 50-slot window,
-#: funding several rounds of operator growth without another
-#: stable-cap extension.
-FROZEN_TIER: frozenset[str] = frozenset({
-    # §2.3/2.4/2.7/2.8 single-expression surfaces (green r1,2,5,9)
-    "project_rename",
-    "derived_columns",
-    "filter_numeric_conjunction",
-    "filter_boolean_algebra",
-    "filter_isin",
-    "filter_null_guard",
-    "case_when_banding",
-    "scalar_string_functions",
-    "fillna_after_left_join",
-    "topk_orders",
-    # single equi-joins (asof/range/skew/pit/anti stay core)
-    "join_flatten_dim",
-    "join_inner",
-    "join_semi",
-    "join_chain_left",
-    # single groupBy aggregates (percentile/sketches/rollup stay core)
-    "agg_count_by_group",
-    "agg_avg_by_group",
-    "agg_conditional_ratio",
-    "agg_distinct",
-    "agg_global_counts",
-    "agg_uniqueness_check",
-    # schema-pinned format round-trips (orc stays core: one green row)
-    "csv_roundtrip_scan",
-    "jsonl_roundtrip_scan",
-    # r11 promotion (VERDICT r10 ask #6): single-expression window /
-    # set-op / rollup / DQ surfaces, byte-identical since their r5-r6
-    # registration under the hash guard, each with >= 3 committed
-    # green driver rounds (latest: r10) — funds the round's two new
-    # core operators and keeps steady-state demand at 44/47.
-    "window_running_sum",
-    "window_lag_delta",
-    "window_value_functions",
-    "window_ntile_pctrank",
-    "window_topk_per_group",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    "agg_cube",
-    "stat_correlation",
-    "events_daily_rollup",
-    "dq_range_violations",
-    "dq_uniqueness_violations",
-    "translate_dim_names",
-    "unpivot_measures",
-    "events_json_props",
-    "weekly_active_users",
-    # r13 early tranche of the staged r14 promotion (the registry
-    # comment above ROTATION_BACKLOG): the only names that already
-    # carry >=3 committed green rounds BEFORE CORRECTNESS_r13 lands
-    # (the r7-green filler cohort reaches its third green only when
-    # the r13 window is recorded, so it stays staged for r14).  Each
-    # is a compact one/two-table plan, byte-stable since its last
-    # green round (function-level `git log -L` checked at promotion),
-    # hash-guarded, with greens asserted by
-    # test_frozen_tier_membership_is_earned:
-    "dedup_survivors",       # greens r8/r9/r10 — post-CC argmin frame
-    "mixture_rebalance",     # greens r8/r9/r10 — compact mixture math
-    "scd2_customer_segment", # greens r8/r9/r10 — single window-lag plan
-    "skew_top_keys",         # greens r8/r9/r10 — one groupBy + top-k
-    "timeseries_gap_fill",   # greens r8/r9/r10 — sequence + one join
-    # core -> frozen (r13): the rollup twin of the already-frozen
-    # agg_cube — a single groupBy rollup aggregate, byte-identical
-    # since its r1 registration, greens r1/r2/r3/r7/r11.
-    "agg_rollup",
-    # r14 promotion (VERDICT r13 ask #8, the staged tranche): the only
-    # stable names that reached >=3 committed greens when
-    # CORRECTNESS_r13 landed — each a compact one-table plan,
-    # byte-stable under the hash guard since registration:
-    "pivot_lang_counts",     # greens r3/r7/r13 — one pivot aggregate
-    "doc_chunking",          # greens r3/r7/r13 — one HOF chunk explode
-    "pareto_revenue_share",  # greens r3/r7/r13 — window over one agg
-})
-
-CORE_TIER: frozenset[str] = frozenset({
-    # flagship / pipeline / metric views
-    "flagship_star_metrics",
-    "fact_build_transform",
-    "metric_view_region",
-    "metric_view_two_dims_where",
-    # §2.1 scans / §2.2 sinks
-    "orc_roundtrip_scan",
-    "python_datasource_scan",
-    "python_datasource_stream",
-    "zorder_key_events",
-    "binaryfile_ingest_scan",
-    # §2.3/2.4/2.7/2.8 surfaces moved to FROZEN_TIER (r10)
-    # §2.5 join ladder
-    "join_anti_incremental",
-    "join_null_safe",
-    "events_asof_enrich",
-    "events_range_join",
-    "join_salted_skew",
-    "join_skew_isolated",
-    "pit_dim_join",
-    # §2.6 aggregation ladder (agg_rollup moved to FROZEN_TIER r13 —
-    # the single-rollup twin of the frozen agg_cube, 5 greens)
-    "agg_percentile",
-    "agg_scale_sketches",
-    # §2.10 UDF ladder
-    "sql_ai_functions",
-    "grouped_zscore_applyinpandas",
-    "agg_geomean_udaf",
-    "mapinarrow_bytelen",
-    "doc_chunking_udtf",
-    # dedup / ANN / blocking (every path)
-    "dedup_exact_canonical",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_incremental_index",
-    "dedup_simhash_pairs",
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh",
-    "dedup_semantic",
-    "dedup_containment",
-    "dedup_containment_prefix",
-    "dedup_containment_lsh",
-    "dedup_cluster_assign",
-    "dedup_cluster_assign_star",
-    "duplicate_ngram_spans",
-    "duplicate_span_removal",
-    "decontaminate_fuzzy_incremental",
-    "contamination_span_lengths",
-    "chunk_dedup_clean",
-    "similarity_topk",
-    "hard_negative_mining",
-    "similarity_topk_lsh_recall",
-    "similarity_topk_ivf_recall",
-    "similarity_topk_pq_recall",
-    "similarity_topk_pq_saved",
-    "blocking_snm_candidates",
-    "inverted_index_postings",
-    # graph / heavy analytics
-    "triangle_count_parts",
-    "pagerank_trade_graph",
-    "frequent_itemset_pairs",
-    # pareto_revenue_share: core -> hash-guarded stable (r13).  The
-    # r7 rework retired its last unbounded window; the plan is pinned
-    # in tests/test_analytics_plans.py, byte-stable since r7
-    # (function-level git history), green r6 and r10 — the proved
-    # compact-plan demotion pattern of VERDICT r11/r12 ask #6.
-    "audience_overlap_sketch",
-    # streaming surface (whole cohort)
-    "events_tumbling_hourly",
-    "events_sliding_window",
-    "events_session_window",
-    "events_streaming_tumbling",
-    "events_streaming_session",
-    "events_streaming_dedupe",
-    "events_streaming_dedupe_ttl",
-    "events_streaming_stateful_totals",
-    "events_streaming_static_join",
-    "events_streaming_rate_alert",
-    "events_stream_stream_join",
-    "events_stream_stream_left_join",
-    "documents_streaming_curation",
-    # train-data pipeline heavies
-    "dataset_hash_split",
-    "leakage_safe_split",
-    "sample_weighted",
-    "quality_classifier_distill",
-    "lm_perplexity_score",
-    "quality_psi_drift",
-    "global_quality_rank",
-    "decontaminate_eval_overlap",
-    "decontaminate_fuzzy",
-    "traindata_curation_pipeline",
-    "export_shards",
-    "traindata_sequence_packing",
-    # r10 heavies (initially budgeted stable per VERDICT r9 ask #6;
-    # promoted same round — the tier docstring's own test is "plans
-    # that carry real risk", and these are multi-stage train-data
-    # paths in the same families as their core siblings; demand
-    # stays ≤ 50 with slack, asserted by the satisfiability test)
-    "packing_bpe_budget",
-    "mixture_bpe_budget",
-    "dsir_importance_weights",
-    "temporal_embargo_split",
-    "metric_view_curation",
-    "tf_idf",
-    "text_analysis_profile",
-    "bpe_merge_pairs",
-    "bpe_merge_iterations",
-    "bpe_vocab_segmentation",
-    "bpe_compression_by_source",
-    "bpe_fertility_by_lang",
-    "user_event_sequences",
-    "pii_redact",
-    "multimodal_frame_sample",
-    "multimodal_features",
-    "multimodal_resize",
-    # r11 additions: the corpus-level overlap matrix shuffles the
-    # shingle key (heavy-join family); the winsorized aggregate keeps
-    # the short cap (its empty-input guard changed in r12).  The
-    # UniMax waterfilling and Zipf OLS — compact-frame closed-form
-    # plans, byte-stable, r11-green — moved to the hash-guarded
-    # stable tier in r12 (VERDICT r11 ask #6: spend tier slack by
-    # demoting proved compact plans, funding new core operators).
-    "corpus_pair_overlap",
-    "agg_winsorized_stats",
-    # the saved-vocab apply is a BPE-family heavy (its siblings are
-    # all core); the seasonal backtest is a compact-frame window
-    # plan left in the stable tier
-    "bpe_apply_saved_vocab",
-    # streaming surface is whole-cohort core
-    "events_streaming_matview_upsert",
-    # r12: the composed five-stage curation pipeline is the definition
-    # of a multi-stage heavy plan; its audit funnel shares the
-    # pair/CC pass
-    "traindata_curation_v2",
-    "curation_funnel_v2",
-    # r13: the nightly-increment composition over persisted dedup/BPE
-    # state (VERDICT r12 ask #2) — same multi-stage heavy family.
-    # (`similarity_topk_ivf_saved` and `curation_funnel_v2_incremental`,
-    # the round's other new operators, are budgeted STABLE under the
-    # hash guard — VERDICT r9 ask #6 precedent: the IVF contract is
-    # the SAME recall readout the core `similarity_topk_ivf_recall`
-    # re-proves every 3 rounds with saved-vs-in-memory equality
-    # test-pinned, and the incremental funnel is an aggregate readout
-    # over exactly the stage frames the core incremental pipeline
-    # carries; further core slots would push steady-state demand past
-    # the 47-slot slack bound, and any edit re-promotes them to the
-    # core cap anyway.)
-    "traindata_curation_v2_incremental",
-})
-
-
-#: Shared modules whose edits can change a stable query's VALUES
-#: without touching the query function itself — the guard closure.
-#: Boundary rationale: value-changing edits concentrate in the
-#: expression helpers (text/text_sql/expr/vectors/constants) and the
-#: split/bucket arithmetic; operator-module edits that only re-shape
-#: plans (hints, exchange strategy) do not change values, and value
-#: correctness is what the staleness evidence asserts.  r8 lesson:
-#: the original fn-only hash was falsified by the very round that
-#: introduced it — quality_score and split_assign were rewritten
-#: while their stable-tier callers kept byte-identical sources.
-_HASH_CLOSURE_FILES = (
-    "functions/text.py",
-    "functions/text_sql.py",
-    "functions/expr.py",
-    "functions/vectors.py",
-    "constants.py",
-)
-
-_closure_digest_cache: list[str] = []
-
-
-def _closure_digest() -> str:
-    if _closure_digest_cache:
-        return _closure_digest_cache[0]
-    import hashlib
-    import pathlib
-
-    h = hashlib.sha256()
-    base = pathlib.Path(__file__).resolve().parent
-    for rel in _HASH_CLOSURE_FILES:
-        f = base / rel
-        if f.exists():
-            h.update(f.read_bytes())
-    # shared split/bucket arithmetic lives inside a query module —
-    # hash those helper functions' sources too (lazy import: by the
-    # time any caller hashes, registration has completed)
-    import inspect
-    import textwrap
-
-    from gaming_ai_analytics_spark import queries_traindata as _qt
-
-    for helper in (
-        _qt.hash_bucket, _qt.hash_bucket_sql,
-        _qt.split_assign, _qt.split_assign_sql,
-    ):
-        h.update(textwrap.dedent(inspect.getsource(helper)).encode())
-    _closure_digest_cache.append(h.hexdigest())
-    return _closure_digest_cache[0]
-
-
-def source_hash(name: str) -> str | None:
-    """sha256 of the registered query's VALUE-DEFINING text: the query
-    function's source, its oracle SQL, and the shared expression-helper
-    closure (``_HASH_CLOSURE_FILES``).
-
-    The stable tier's change guard: a stable query's recorded hash
-    asserts "this exact definition is the one that was proved green" —
-    any edit to the function, its oracle, or a shared value helper
-    drifts the hash and re-promotes the name to the core staleness
-    cap until re-proved.  Returns ``None`` when the source is
-    unavailable (builtins, exec'd code) — callers must treat that as
-    "changed" (core cap)."""
-    import hashlib
-    import inspect
-    import textwrap
-
-    fn, oracle = _REGISTRY[name]
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
-        return None
-    payload = (
-        textwrap.dedent(src)
-        + "\x00" + (oracle or "")
-        + "\x00" + _closure_digest()
-    )
-    return hashlib.sha256(payload.encode()).hexdigest()
-
-
-def _apply_driver_window() -> None:
-    """Reorder ``_REGISTRY`` so ``DRIVER_WINDOW`` names iterate first.
-
-    Called lazily from ``queries()`` / ``oracle_sql()`` rather than at
-    import time: a direct ``import queries_ext`` re-enters this module
-    before ``queries_ext``'s own registrations have run (circular
-    import), so an eager check would raise on a half-built registry.
-    By first *call* time every module body has finished.
-    """
-    missing = [n for n in DRIVER_WINDOW if n not in _REGISTRY]
-    if missing:  # fail loudly: a typo here wastes a round
-        raise KeyError(f"DRIVER_WINDOW names not registered: {missing}")
-    ordered = {n: _REGISTRY[n] for n in DRIVER_WINDOW}
-    ordered.update((n, v) for n, v in _REGISTRY.items() if n not in ordered)
-    _REGISTRY.clear()
-    _REGISTRY.update(ordered)
 
 
 _load_all()

@@ -14,7 +14,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark"]
+__all__ = ["cpus", "get_spark"]
 
 # A cost-based "static plan below N bytes" adaptive-execution gate
 # (sub-GB inputs on a newSession child with AQE off) was built and
@@ -26,6 +26,11 @@ __all__ = ["get_spark"]
 # An earlier same-session on/off toggle A/B that suggested otherwise
 # was order-confounded (the second arm ran JIT-warm). See BASELINE.md
 # §floor analysis. AQE stays on unconditionally.
+
+
+def cpus() -> int:
+    """Local core count: ``$SPARK_GRAFT_CPUS``, else the host's."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
 def get_spark(
@@ -42,10 +47,10 @@ def get_spark(
     - UTC session timezone: parquet timestamp parity with the DuckDB
       oracle (duckdb timestamps are UTC-naive).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    n = cpus()
+    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{n}]")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
+        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", n))
     # local[N] runs N task threads inside ONE JVM whose default heap is
     # 1g — 32 concurrent aggregation states in 1 GB OOMed a full-registry
     # verify pass at sf0.1. Size the heap like the executor fleet it

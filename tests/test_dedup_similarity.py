@@ -822,7 +822,10 @@ def test_span_removal_interval_complement_edges(spark):
     an unguarded head would emit [0,-1]), an OVERLAPPING start chain
     collapsing to one interval, a TAIL gap after the last interval,
     full coverage (doc vanishes), and an untouched doc (null-join
-    path keeps everything)."""
+    path keeps everything). ANSI mode is pinned on, so the untouched
+    doc's empty-starts path also proves that CaseWhen never evaluates
+    the slice/element_at branch: under ANSI both raise on an empty
+    array."""
     from gaming_ai_analytics_spark.operators.dedup import (
         remove_duplicate_spans,
     )
@@ -837,10 +840,17 @@ def test_span_removal_interval_complement_edges(spark):
         (7, "b c d x"),      # duplicated "b c","c d" -> kept "x"
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: (r.n_tokens, r.n_kept, r.n_removed, r.cleaned_text)
-        for r in remove_duplicate_spans(df, "doc_id", "text", k=2).collect()
-    }
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = {
+            r.doc_id: (r.n_tokens, r.n_kept, r.n_removed, r.cleaned_text)
+            for r in remove_duplicate_spans(
+                df, "doc_id", "text", k=2
+            ).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
     assert got == {
         1: (5, 1, 4, "e"),
         2: (5, 3, 2, "x y z"),

@@ -1,312 +1,44 @@
 """Registry contract tests.
 
-The driver's correctness pass checks only the FIRST 50 entries of
-``registry.queries()`` iteration order (proved empirically in rounds
-1-2: each round's CORRECTNESS keys == the 50-entry registry prefix).
-Round 2 lost all driver evidence for 40 queries because new
-registrations silently shifted that prefix.  These tests pin the
-window so any future registration drift fails loudly in CI instead of
-silently in the next round's driver run — and, from round 6, enforce
-the rotation discipline itself against the committed CORRECTNESS
-history (VERDICT r5 ask #7): a red ``test_stale_queries_all_scheduled
-_or_queued`` at round start means "rotate DRIVER_WINDOW before doing
-anything else".
+Every registered query is checked against its DuckDB oracle at sf0.01,
+one pytest id per query, through the same ``__spark_entry__`` contract
+(and its ``_portable`` shim) that external callers use.
 """
 
 from __future__ import annotations
 
-import json
 import pathlib
-import subprocess
+import sys
 
 import pytest
 
+import __spark_entry__
+from conftest import SF_ORACLE
 from gaming_ai_analytics_spark import registry
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO / "tools"))
 
-#: Per-tier staleness caps (VERDICT r7 ask #2 — the tier definitions,
-#: the satisfiability arithmetic, and the source-hash plan-change
-#: guard live in registry.py next to CORE_TIER).
-HASHES_PATH = pathlib.Path(__file__).with_name("stable_plan_hashes.json")
+import verify_local  # noqa: E402
 
-
-def _effective_cap(name: str) -> int:
-    """Core cap for core-tier names AND for stable/frozen names whose
-    source hash drifted from (or was never recorded in) the committed
-    baseline — a changed function means a possibly-changed plan, so
-    the long leash no longer applies.  Hash-valid frozen names get
-    the frozen cap; hash-valid stable names the stable cap."""
-    if name in registry.CORE_TIER:
-        return registry.CORE_STALENESS_CAP
-    recorded = _recorded_hashes().get(name)
-    if recorded is None or recorded != registry.source_hash(name):
-        return registry.CORE_STALENESS_CAP
-    if name in registry.FROZEN_TIER:
-        return registry.STALENESS_CAP_FROZEN
-    return registry.STALENESS_CAP_STABLE
+_QUERIES = __spark_entry__.queries()
 
 
-def _recorded_hashes() -> dict[str, str]:
-    if not HASHES_PATH.exists():
-        return {}
-    return json.loads(HASHES_PATH.read_text())
+@pytest.fixture(scope="module")
+def duck():
+    con = verify_local.duck_connect(SF_ORACLE)
+    yield con
+    con.close()
 
 
-def _commit_unix_ts(path: pathlib.Path) -> int | None:
-    """Unix timestamp of the last commit touching ``path`` (None if
-    never committed or git is unavailable)."""
-    try:
-        out = subprocess.run(
-            ["git", "log", "-1", "--format=%ct", "--", str(path)],
-            cwd=REPO, capture_output=True, text=True, timeout=30,
-        )
-    except Exception:
-        return None
-    s = out.stdout.strip()
-    return int(s) if out.returncode == 0 and s else None
-
-
-def _rotation_pending() -> bool:
-    """True in exactly the round-boundary state (VERDICT r6 ask #3):
-    the newest CORRECTNESS_r*.json landed AFTER the last committed
-    change to registry.py, i.e. the driver just recorded a round and
-    the window has not been rotated yet.  The rotation-policy tests
-    skip (with the rotation instruction) in that state, so a red
-    policy test always means "you forgot to rotate", never "a round
-    just ended"."""
-    files = list(REPO.glob("CORRECTNESS_r*.json"))
-    if not files:
-        return False
-    newest = max(files, key=lambda f: int(f.stem.split("_r")[1]))
-    corr_ts = _commit_unix_ts(newest)
-    if corr_ts is None:
-        # newest correctness file exists but has no commit yet —
-        # the driver wrote it moments ago; rotation is owed
-        return True
-    reg_ts = _commit_unix_ts(
-        REPO / "gaming_ai_analytics_spark" / "registry.py"
-    )
-    if reg_ts is None:
-        return False
-    return corr_ts > reg_ts
-
-
-_ROTATE_MSG = (
-    "new CORRECTNESS landed after the last registry.py rotation — "
-    "rotate DRIVER_WINDOW first (fresh-green names out, stale/"
-    "never-checked names in from ROTATION_BACKLOG), then this test "
-    "re-arms"
-)
-
-
-def _green_history() -> tuple[int, dict[str, int]]:
-    """(latest committed round, query -> last round its driver row was
-    green).  Green = rows+schema match and the value hash matched when
-    one was recorded (rows-only entries have no hash signal)."""
-    last: dict[str, int] = {}
-    latest = 0
-    for f in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        rnd = int(f.stem.split("_r")[1])
-        latest = max(latest, rnd)
-        for name, row in json.loads(f.read_text()).items():
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match") in (True, None)
-            ):
-                last[name] = rnd
-    return latest, last
-
-
-def test_driver_window_is_first_50():
-    names = list(registry.queries())
-    assert len(registry.DRIVER_WINDOW) == 50
-    assert len(set(registry.DRIVER_WINDOW)) == 50
-    assert tuple(names[:50]) == registry.DRIVER_WINDOW
-
-
-def test_window_and_backlog_are_registered_and_disjoint():
-    qs = set(registry.queries())
-    assert set(registry.DRIVER_WINDOW) <= qs
-    assert set(registry.ROTATION_BACKLOG) <= qs
-    assert not set(registry.DRIVER_WINDOW) & set(registry.ROTATION_BACKLOG)
-
-
-def test_window_spends_no_slot_on_fresh_rows():
-    """Every window slot must buy NEW evidence: no name that already
-    has a green driver row from the latest committed round (those are
-    as fresh as evidence gets) may occupy one of the 50 slots."""
-    if _rotation_pending():
-        pytest.skip(_ROTATE_MSG)
-    latest, last = _green_history()
-    fresh = {q for q, r in last.items() if r == latest}
-    wasted = set(registry.DRIVER_WINDOW) & fresh
-    assert not wasted, f"window slots wasted on latest-round-green: {wasted}"
-
-
-def test_stale_queries_all_scheduled_or_queued():
-    """The per-tier staleness caps, enforced against committed
-    history: every registered query whose last green driver row is at
-    least its tier's cap behind the latest committed round — or that
-    has never had one, regardless of tier — must be either in this
-    round's DRIVER_WINDOW or explicitly queued in ROTATION_BACKLOG.
-    Nothing goes stale silently.
-
-    When a new CORRECTNESS_r{N}.json lands this test recomputes; the
-    ``_rotation_pending`` guard converts the round-boundary state into
-    a skip-with-instruction, so a FAILURE always means the rotation
-    (or the backlog bookkeeping) was genuinely forgotten."""
-    if _rotation_pending():
-        pytest.skip(_ROTATE_MSG)
-    latest, last = _green_history()
-    stale = {
-        q
-        for q in registry.queries()
-        if q not in last or last[q] <= latest - _effective_cap(q)
-    }
-    uncovered = (
-        stale - set(registry.DRIVER_WINDOW) - set(registry.ROTATION_BACKLOG)
-    )
-    # Distinguish the two failure causes in the message: a stable-tier
-    # name can go "stale" purely because its recorded source hash
-    # drifted (an edit to the function, its oracle, or a shared value
-    # helper in registry._HASH_CLOSURE_FILES demotes it to the core
-    # cap).  That case has a copy-paste fix; genuine rotation debt
-    # does not.
-    drifted = sorted(
-        n for n in uncovered
-        if n not in registry.CORE_TIER
-        and _recorded_hashes().get(n) != registry.source_hash(n)
-    )
-    hint = (
-        (
-            f"\nOf these, {drifted} are stable-tier names whose source "
-            f"hash drifted from tests/stable_plan_hashes.json (edited "
-            f"query fn / oracle / shared helper). After re-verifying "
-            f"them green (python tools/verify_local.py "
-            f"/root/testdata/sf0.01 <names>), regenerate the baseline:"
-            f"\n    python tools/update_stable_hashes.py"
-        )
-        if drifted
-        else ""
-    )
-    assert not uncovered, (
-        f"stale queries fell off both the window and the backlog: "
-        f"{sorted(uncovered)}{hint}"
-    )
-
-
-def test_tier_caps_arithmetically_satisfiable():
-    """The cap promise must be keepable at steady state: the per-round
-    slot demand implied by the tier sizes and caps has to fit the
-    50-slot window with slack for new operators.  This is the
-    structural fix for the r7 finding that a flat 3-round cap over 207
-    names can never be satisfied by a 50-slot window (ceil(207/3) = 69
-    slots/round > 50)."""
-    import math
-
-    names = set(registry.queries())
-    core = names & registry.CORE_TIER
-    frozen = names & registry.FROZEN_TIER
-    stable = names - core - frozen
-    # every tier name must actually be registered (typo guard), and
-    # the explicit tiers must be disjoint
-    assert registry.CORE_TIER <= names, (
-        f"CORE_TIER names not registered: "
-        f"{sorted(registry.CORE_TIER - names)}"
-    )
-    assert registry.FROZEN_TIER <= names, (
-        f"FROZEN_TIER names not registered: "
-        f"{sorted(registry.FROZEN_TIER - names)}"
-    )
-    assert not registry.CORE_TIER & registry.FROZEN_TIER
-    demand = (
-        math.ceil(len(core) / registry.CORE_STALENESS_CAP)
-        + math.ceil(len(stable) / registry.STALENESS_CAP_STABLE)
-        + math.ceil(len(frozen) / registry.STALENESS_CAP_FROZEN)
-    )
-    # VERDICT r9 ask #6: keep >= 3 slots of slack for operator growth
-    assert demand <= 47, (
-        f"tier caps leave <3 slots of slack: steady-state demand "
-        f"{demand} slots (|core|={len(core)} cap "
-        f"{registry.CORE_STALENESS_CAP}, |stable|={len(stable)} cap "
-        f"{registry.STALENESS_CAP_STABLE}, |frozen|={len(frozen)} cap "
-        f"{registry.STALENESS_CAP_FROZEN}) vs the 50-slot window"
-    )
-
-
-def test_frozen_tier_membership_is_earned():
-    """FROZEN_TIER's long leash is only honest for names with real
-    evidence depth: every frozen name must carry at least THREE
-    committed green driver rounds (the membership criterion in
-    registry.py) and a recorded source hash — a name without either
-    belongs in core or stable, not frozen."""
-    _, last = _green_history()
-    rounds: dict[str, int] = {}
-    for f in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        rnd = int(f.stem.split("_r")[1])
-        for name, row in json.loads(f.read_text()).items():
-            if (
-                name in registry.FROZEN_TIER
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match") in (True, None)
-            ):
-                rounds[name] = rounds.get(name, 0) + 1
-    shallow = sorted(
-        n for n in registry.FROZEN_TIER if rounds.get(n, 0) < 3
-    )
-    assert not shallow, (
-        f"frozen-tier names with <3 committed green rounds: {shallow}"
-    )
-    recorded = _recorded_hashes()
-    unguarded = sorted(
-        n for n in registry.FROZEN_TIER if n not in recorded
-    )
-    assert not unguarded, (
-        f"frozen-tier names without a recorded source hash "
-        f"(run tools/update_stable_hashes.py): {unguarded}"
-    )
-
-
-def test_stable_tier_hashes_recorded_and_hashable():
-    """Every stable-tier name needs a recorded source hash for the
-    plan-change guard to mean anything: a missing or stale record
-    silently demotes the name to the core cap (safe direction), but a
-    build that leaves them missing wholesale has disabled the stable
-    tier.  Regenerate with tools/update_stable_hashes.py after a green
-    round."""
-    names = set(registry.queries())
-    stable = sorted(names - registry.CORE_TIER)
-    recorded = _recorded_hashes()
-    missing = [n for n in stable if n not in recorded]
-    assert not missing, (
-        f"stable-tier names without a recorded source hash "
-        f"(run tools/update_stable_hashes.py): {missing}"
-    )
-    unhashable = [n for n in stable if registry.source_hash(n) is None]
-    assert not unhashable, (
-        f"stable-tier names whose source cannot be hashed (move them "
-        f"to CORE_TIER): {unhashable}"
-    )
-
-
-def test_every_query_callable_and_oracle_keys_subset():
-    qs = registry.queries()
-    oracles = registry.oracle_sql()
-    assert set(oracles) <= set(qs)
-    for fn in qs.values():
-        assert callable(fn)
-
-
-def test_window_entries_all_carry_full_oracles():
-    """Zero rows-only checks in the checked window — a slot without a
-    value-hash oracle is a weaker signal than every alternative name
-    on the backlog that has one."""
-    oracles = registry.oracle_sql()
-    weak = [n for n in registry.DRIVER_WINDOW if n not in oracles]
-    assert not weak, f"rows-only entries occupy window slots: {weak}"
+@pytest.mark.parametrize("name", list(_QUERIES))
+def test_query_matches_oracle(spark, duck, name):
+    """Rows, column names, Arrow type classes and values all match.
+    A query registered without an oracle fails on the lookup."""
+    oracle = __spark_entry__.oracle_sql()[name]
+    out: list = []
+    sdf = _QUERIES[name](spark, SF_ORACLE)
+    assert verify_local.compare(name, sdf, duck, oracle, out), out[-1][2]
 
 
 def test_every_registered_query_documented_in_coverage():
@@ -316,28 +48,3 @@ def test_every_registered_query_documented_in_coverage():
     text = (REPO / "COVERAGE.md").read_text()
     missing = [n for n in registry.queries() if f"`{n}`" not in text]
     assert not missing, f"queries absent from COVERAGE.md: {missing}"
-
-
-def test_round_artifacts_committed():
-    """Red-until-committed guard for driver round artifacts (VERDICT r9
-    ask #1, automating the defect flagged at the r7/r8/r9 closes): the
-    staleness machinery above reads COMMITTED CORRECTNESS history, so
-    an untracked CORRECTNESS_r*.json silently under-counts staleness
-    and a modified BENCH_LOCAL_r*.json mis-cites the official bench.
-    The round cannot proceed while any driver artifact at the repo
-    root is untracked or carries uncommitted modifications — commit
-    them FIRST (before rotating, before building)."""
-    try:
-        out = subprocess.run(
-            ["git", "status", "--porcelain", "--", "CORRECTNESS_r*.json",
-             "BENCH_r*.json", "BENCH_LOCAL_r*.json", "AUDIT_r*.json",
-             "AUDIT_LOCAL_r*.json", "VERDICT.md", "ADVICE.md"],
-            cwd=REPO, capture_output=True, text=True, timeout=30,
-        )
-    except Exception:
-        pytest.skip("git unavailable")
-    dirty = [ln for ln in out.stdout.splitlines() if ln.strip()]
-    assert not dirty, (
-        "driver round artifacts uncommitted — commit them before any "
-        f"other round work:\n" + "\n".join(dirty)
-    )

@@ -21,8 +21,11 @@ Usage:  python tools/verify_local.py [--plain] [sf_dir] [query_name ...]
 of ``session.py``'s confs), replicating the DRIVER's environment: round
 6's one red row (`python_datasource_scan`) passed every local check and
 failed in the driver purely because a query silently depended on a
-session.py conf. A window that is green under ``--plain`` cannot fail
+session.py conf. A query that is green under ``--plain`` cannot fail
 in the driver for that class of reason.
+
+Under ``--plain`` the master and shuffle partitions follow
+``session.cpus()``, so results compare across hosts.
 """
 
 from __future__ import annotations
@@ -164,10 +167,12 @@ def main():
     if plain:
         from pyspark.sql import SparkSession
 
+        from gaming_ai_analytics_spark.session import cpus
+
         spark = (
-            SparkSession.builder.master("local[32]")
+            SparkSession.builder.master(f"local[{cpus()}]")
             .appName("verify_local_plain")
-            .config("spark.sql.shuffle.partitions", "32")
+            .config("spark.sql.shuffle.partitions", str(cpus()))
             .config("spark.ui.enabled", "false")
             .getOrCreate()
         )
