@@ -492,6 +492,13 @@ def main() -> None:
         "load_avg_start": _LOAD_AT_START,
         "load_after_settle": load_after_settle,
         "settle_wait_s": settle_wait_s,
+        # host facts: absolute seconds only compare on like hosts
+        "host_cpus": cpus(),
+        "host_mem_gb": round(
+            os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30,
+            1,
+        ),
+        "spark_version": spark.version,
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,

@@ -1769,10 +1769,14 @@ def remove_duplicate_spans(
     _empty = F.array().cast("array<int>")
     _k = F.lit(k)
     _m = F.size(_S)
-    _lead = F.concat(F.slice(_S, 2, _m - 1), F.array(_n))
+    # both stay in bounds on the empty-starts path (_m == 0): a
+    # negative slice length always raises, element_at under ANSI
+    _lead = F.concat(
+        F.slice(_S, 2, F.greatest(_m - 1, F.lit(0))), F.array(_n)
+    )
+    _s1 = F.try_element_at(_S, F.lit(1))
     _head = F.when(
-        F.element_at(_S, 1) > 0,
-        F.sequence(F.lit(0), F.element_at(_S, 1) - 1),
+        _s1 > 0, F.sequence(F.lit(0), _s1 - 1)
     ).otherwise(_empty)
     _gaps = F.flatten(
         F.zip_with(
@@ -1783,13 +1787,8 @@ def remove_duplicate_spans(
             ).otherwise(_empty),
         )
     )
-    # Safe only through CaseWhen laziness: on the empty-starts path
-    # (_m == 0, the null-join docs) `slice(_S, 2, _m - 1)` gets a
-    # negative length, which always raises, and `element_at(_S, 1)` is
-    # out of bounds, which raises under ANSI mode. Both live in
-    # `_head`/`_gaps`, i.e. only in the `otherwise` branch below, which
-    # CaseWhen never evaluates when `_m == 0`. Keep them there
-    # (test_span_removal_interval_complement_edges pins it, ANSI on).
+    # the null-join docs (_m == 0) keep every position; without this
+    # branch the complement would be [] rather than 0..n-1
     kept_pos = F.when(_m == 0, F.sequence(F.lit(0), _n - 1)).otherwise(
         F.concat(_head, _gaps)
     )

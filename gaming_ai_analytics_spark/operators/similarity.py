@@ -515,10 +515,7 @@ def load_ivf_index(
 
 
 def topk_similar_ivf_saved(
-    spark,
-    store,
-    layer: str,
-    name: str,
+    index: tuple,
     probes: DataFrame,
     k: int = 5,
     probe_id_col: str = "probe_id",
@@ -533,8 +530,10 @@ def topk_similar_ivf_saved(
     against the quantizer's cell count and the probe vectors'
     dimensionality against the recorded ``dim`` (one bounded
     ``first()`` — a wrong-dim probe frame would otherwise null out
-    the distance expression silently)."""
-    assigned, centroids, meta = load_ivf_index(spark, store, layer, name)
+    the distance expression silently).  ``index`` is a
+    :func:`load_ivf_index` result, so a caller that probes many times
+    pays the load once."""
+    assigned, centroids, meta = index
     if n_probe > meta["n_clusters"]:
         raise ValueError(
             f"n_probe={n_probe} exceeds the saved quantizer's "
@@ -1106,10 +1105,7 @@ def load_pq_index(
 
 
 def topk_similar_pq_saved(
-    spark,
-    store,
-    layer: str,
-    name: str,
+    index: tuple,
     corpus: DataFrame,
     probes: DataFrame,
     k: int = 5,
@@ -1125,8 +1121,9 @@ def topk_similar_pq_saved(
     bounded exact re-rank against the raw vectors. Parameter-meta
     guard: probe dimensionality is validated against m·dsub (one
     bounded ``first()`` — a wrong-dim probe frame would otherwise
-    produce truncated lookup tables silently)."""
-    coded, books, meta = load_pq_index(spark, store, layer, name)
+    produce truncated lookup tables silently).  ``index`` is a
+    :func:`load_pq_index` result."""
+    coded, books, meta = index
     if probe_rows is None:
         probe_rows = [
             (r[probe_id_col], list(r[vec_col])) for r in probes.collect()

@@ -19,6 +19,7 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gaming_ai_analytics_spark import artifacts
 from gaming_ai_analytics_spark.functions.scoring import translate_text
 from gaming_ai_analytics_spark.operators.quality import (
     IsInRange,
@@ -156,24 +157,17 @@ register(
 #: under a fresh __mvN_ prefix every call (22 ms), which also leaked
 #: views into the session catalog. A metric view is a long-lived
 #: definition by design (the semantic-layer pattern registers views
-#: once), so the constructed MetricView is cached per
-#: (session identity, sf_dir) and re-validated by object identity
-#: (``mv.spark is spark`` — an id() collision after session GC
-#: rebuilds instead of mis-binding). The CONSUMER query is still
-#: compiled and analyzed fresh on every call (spark.sql — a new plan,
-#: new RDDs, no cross-run stage reuse), so the bench's fresh-lineage
-#: contract is untouched; only the once-per-definition view binding
-#: stops being re-paid. Fixture dirs are immutable within a process
-#: (read-only testdata; derived .benchdata built once), which is what
-#: makes the cached views' file-index snapshot safe.
-_MV_CACHE: dict[tuple[int, str], MetricView] = {}
+#: once), so the constructed MetricView is an ``artifacts.once`` value
+#: per (session, sf_dir). The CONSUMER query is still compiled and
+#: analyzed fresh on every call (spark.sql — a new plan, new RDDs, no
+#: cross-run stage reuse), so the bench's fresh-lineage contract is
+#: untouched; only the once-per-definition view binding stops being
+#: re-paid. No source fingerprint: this is a dashboard hot path, and
+#: fixture dirs are immutable within a process (read-only testdata),
+#: which is what makes the bound tables' file-index snapshot safe.
 
 
-def _orders_metric_view(spark: SparkSession, sf_dir: str) -> MetricView:
-    key = (id(spark), sf_dir)
-    mv = _MV_CACHE.get(key)
-    if mv is not None and mv.spark is spark:
-        return mv
+def _build_orders_metric_view(spark: SparkSession, sf_dir: str) -> MetricView:
     spec = MetricViewSpec(
         source="orders",
         filter="orders.o_totalprice IS NOT NULL",
@@ -205,9 +199,14 @@ def _orders_metric_view(spark: SparkSession, sf_dir: str) -> MetricView:
         t: load_table(spark, sf_dir, t)
         for t in ("orders", "customer", "nation", "region")
     }
-    mv = MetricView(spark, spec, tables)
-    _MV_CACHE[key] = mv
-    return mv
+    return MetricView(spark, spec, tables)
+
+
+def _orders_metric_view(spark: SparkSession, sf_dir: str) -> MetricView:
+    return artifacts.once(
+        spark, sf_dir, "orders_metric_view",
+        lambda: _build_orders_metric_view(spark, sf_dir),
+    )
 
 
 def q_metric_view_region(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -325,9 +324,6 @@ def q_csv_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference pass) and return the rows. A lossless round-trip hashes
     identically to the parquet-backed oracle, which proves the scan
     options, not just the write."""
-    import os
-    import tempfile
-
     from pyspark.sql import types as T
 
     from gaming_ai_analytics_spark.sources.io import read_csv
@@ -339,7 +335,7 @@ def q_csv_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-invocation dir (r6, mirroring binaryfile_ingest_scan): a
     # fixed per-SF path races two concurrent invocations
-    path = tempfile.mkdtemp(prefix="gaa_csv_roundtrip_")
+    path = artifacts.scratch("gaa_csv_roundtrip_")
     (
         docs.write.mode("overwrite")
         .option("header", True)
@@ -589,9 +585,6 @@ def q_jsonl_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     through sources.io.read_jsonl (schema-pinned, permissive — no
     inference pass). A lossless round-trip hashes identically to the
     parquet-backed oracle, proving the scan path."""
-    import os
-    import tempfile
-
     from pyspark.sql import types as T
 
     from gaming_ai_analytics_spark.sources.io import read_jsonl
@@ -603,7 +596,7 @@ def q_jsonl_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-invocation dir (r6, mirroring binaryfile_ingest_scan): a
     # fixed per-SF path races two concurrent invocations
-    path = tempfile.mkdtemp(prefix="gaa_jsonl_roundtrip_")
+    path = artifacts.scratch("gaa_jsonl_roundtrip_")
     docs.write.mode("overwrite").json(path)
     schema = T.StructType(
         [
@@ -633,9 +626,6 @@ def q_orc_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan back through sources.io.read_orc (schema-pinned). A lossless
     round-trip hashes identically to the parquet-backed oracle,
     proving the third columnar source/sink path."""
-    import os
-    import tempfile
-
     from pyspark.sql import types as T
 
     from gaming_ai_analytics_spark.sources.io import read_orc
@@ -647,7 +637,7 @@ def q_orc_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-invocation dir (r6, mirroring binaryfile_ingest_scan): a
     # fixed per-SF path races two concurrent invocations
-    path = tempfile.mkdtemp(prefix="gaa_orc_roundtrip_")
+    path = artifacts.scratch("gaa_orc_roundtrip_")
     docs.write.mode("overwrite").orc(path)
     schema = T.StructType(
         [

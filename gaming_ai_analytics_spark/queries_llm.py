@@ -14,6 +14,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gaming_ai_analytics_spark import artifacts
 from gaming_ai_analytics_spark.functions.text import (
     bpe_ish_token_count,
     doc_fingerprint,
@@ -147,29 +148,6 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 register("dedup_minhash_lsh", q_dedup_minhash_lsh, _JACCARD_PAIRS_SQL)
 
 
-_LSH_INDEX_DIRS: dict[str, str] = {}  # sf_dir -> warehouse dir
-
-
-def _lsh_index_dir(sf_dir: str) -> str:
-    """Process-lifetime temp warehouse for the incremental-LSH index,
-    one slot per scale factor: created once, reused (tables
-    overwritten) by every invocation at that sf, deleted at
-    interpreter exit.  mkdtemp-per-call leaked a full bands+shingles
-    index per bench/verify run (ADVICE r7); the per-sf key keeps a
-    still-lazy result frame from one sf from reading an index a later
-    invocation at a DIFFERENT sf overwrote (same-sf overwrites
-    rebuild identical data)."""
-    if sf_dir not in _LSH_INDEX_DIRS:
-        import atexit
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="gaa_lshidx_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _LSH_INDEX_DIRS[sf_dir] = d
-    return _LSH_INDEX_DIRS[sf_dir]
-
-
 def q_dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nightly-increment dedup against a PERSISTED LSH index: the
     corpus (doc_id % 10 != 0) is indexed once via
@@ -182,9 +160,11 @@ def q_dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch; banded-LSH recall is 1.0 at the fixtures' similarity gap
     (same rationale as ``dedup_minhash_lsh``). Index tables are
     managed-table writes (bucket metadata lives in the catalog) into
-    ONE process-lifetime warehouse dir, overwritten per invocation and
-    removed at interpreter exit — repeated bench/verify runs reuse the
-    slot instead of leaking a full index per call (ADVICE r7)."""
+    ONE process-lifetime ``artifacts.workdir`` per sf, overwritten per
+    invocation — repeated bench/verify runs reuse the slot instead of
+    leaking a full index per call (ADVICE r7); the per-sf slot keeps a
+    still-lazy result at one sf from reading an index a later
+    invocation at another sf overwrote."""
     from gaming_ai_analytics_spark.operators.dedup import (
         minhash_lsh_pairs_incremental,
         save_minhash_index,
@@ -194,7 +174,7 @@ def q_dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
-    store = TableStore(spark, _lsh_index_dir(sf_dir))
+    store = TableStore(spark, artifacts.workdir(sf_dir, "lshidx"))
     save_minhash_index(
         store,
         "idx",
@@ -735,24 +715,6 @@ def q_similarity_topk_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 register("similarity_topk_ivf_recall", q_similarity_topk_ivf_recall, _ANN_RECALL_ORACLE)
 
 
-_IVF_SAVED_DIRS: dict[str, str] = {}  # sf_dir -> index warehouse dir
-_IVF_SAVED_BUILT: set[str] = set()  # sf_dirs whose index is built
-
-
-def _ivf_saved_dir(sf_dir: str) -> str:
-    """Process-lifetime temp warehouse for the persisted IVF index —
-    the `_lsh_index_dir` reuse-don't-leak pattern."""
-    if sf_dir not in _IVF_SAVED_DIRS:
-        import atexit
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="gaa_ivfidx_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _IVF_SAVED_DIRS[sf_dir] = d
-    return _IVF_SAVED_DIRS[sf_dir]
-
-
 def q_similarity_topk_ivf_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAVED-quantizer serving shape of the IVF tier (VERDICT r12
     ask #5): `similarity_topk_ivf_recall` re-trains k-means per run —
@@ -762,7 +724,8 @@ def q_similarity_topk_ivf_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     `save_minhash_index` / `bpe_apply_saved_vocab` discipline), and
     probes it nightly (`topk_similar_ivf_saved`: meta-guarded routing
     + cell-pruned exact scan; no fit, no corpus re-assignment).  The
-    build here runs at most once per (process, sf_dir) so repeated
+    build and index load run at most once per (session, sf_dir,
+    embeddings fingerprint) via ``artifacts.once``, so repeated
     invocations measure the PROBE path; the registered readout is the
     same hash-checked recall contract as the re-training twin (floor
     0.75 vs the exact tier — same parameters, so the saved index must
@@ -771,26 +734,28 @@ def q_similarity_topk_ivf_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     the retrain path: BASELINE.md (tools/exp_ivf_saved.py)."""
     from gaming_ai_analytics_spark.operators.similarity import (
         build_ivf_index,
+        load_ivf_index,
         save_ivf_index,
         topk_similar_ivf_saved,
     )
     from gaming_ai_analytics_spark.sources.io import TableStore
 
-    import hashlib
-
     emb = load_table(spark, sf_dir, "embeddings")
     probes = _probes(spark, sf_dir)
-    store = TableStore(spark, _ivf_saved_dir(sf_dir))
-    name = f"emb{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    if sf_dir not in _IVF_SAVED_BUILT or not spark.catalog.tableExists(
-        store.table_name("idx", f"{name}_cells")
-    ):
-        assigned, cents = build_ivf_index(emb)
-        save_ivf_index(store, "idx", name, assigned, cents)
-        _IVF_SAVED_BUILT.add(sf_dir)
-    ann = topk_similar_ivf_saved(
-        spark, store, "idx", name, probes, k=_TOPK_K, n_probe=8
+    store = TableStore(spark, artifacts.workdir(sf_dir, "ivfidx"))
+    name = f"emb{artifacts.token(sf_dir)}"
+
+    def build():
+        save_ivf_index(store, "idx", name, *build_ivf_index(emb))
+        return load_ivf_index(spark, store, "idx", name)
+
+    index = artifacts.once(
+        spark, sf_dir, "ivf_saved", build, sources=("embeddings",),
+        exists=lambda: spark.catalog.tableExists(
+            store.table_name("idx", f"{name}_cells")
+        ),
     )
+    ann = topk_similar_ivf_saved(index, probes, k=_TOPK_K, n_probe=8)
     return _ann_recall_summary(
         topk_similar(emb, probes, k=_TOPK_K), ann, floor=0.75
     )
@@ -1500,19 +1465,18 @@ def q_binaryfile_ingest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the same reader fans out over an object-store listing;
     ``pathGlobFilter``/``recursiveFileLookup`` handle layout.
 
-    The landing directory is a per-invocation ``mkdtemp`` — two
+    The landing directory is a per-invocation ``artifacts.scratch`` — two
     concurrent invocations never share a path. The local-FS landing
     zone assumes executors and driver see one filesystem (true in
     local mode and on any shared mount); on a real cluster the path
     would be an object-store URI, which the same ``foreachPartition``
     write and ``binaryFile`` read handle unchanged."""
     import os
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
-    path = tempfile.mkdtemp(prefix="gaa_binfiles_")
+    path = artifacts.scratch("gaa_binfiles_")
 
     def write_part(rows):
         for r in rows:
@@ -2071,29 +2035,26 @@ register(
 )
 
 
-_PQ_BOOKS: dict[str, "object"] = {}  # sf_dir -> trained codebooks
-_PQ_LOCK = __import__("threading").RLock()
-
-
 def _pq_codebooks_cached(spark: SparkSession, sf_dir: str):
-    """Train the PQ codebooks at most once per (process, sf_dir) —
-    the `_IVF_SAVED_BUILT` discipline. The build itself is BOUNDED
-    execution (one count + one ≤PQ_TRAIN_SAMPLE_ROWS sample collect;
-    Lloyd's runs in numpy on the driver), documented in
+    """Train the PQ codebooks at most once per (session, sf_dir,
+    embeddings fingerprint) via ``artifacts.once``. The build itself
+    is BOUNDED execution (one count + one ≤PQ_TRAIN_SAMPLE_ROWS sample
+    collect; Lloyd's runs in numpy on the driver), documented in
     tools/plan_audit.py's construction-time exception list."""
-    with _PQ_LOCK:
-        if sf_dir not in _PQ_BOOKS:
-            from gaming_ai_analytics_spark.operators.similarity import (
-                train_pq_codebooks,
-            )
+    from gaming_ai_analytics_spark.operators.similarity import (
+        train_pq_codebooks,
+    )
 
-            _PQ_BOOKS[sf_dir] = train_pq_codebooks(
-                load_table(spark, sf_dir, "embeddings"),
-                dim=EMBEDDING_DIM,
-                m=_PQ_M,
-                ksub=_PQ_KSUB,
-            )
-        return _PQ_BOOKS[sf_dir]
+    return artifacts.once(
+        spark, sf_dir, "pq_codebooks",
+        lambda: train_pq_codebooks(
+            load_table(spark, sf_dir, "embeddings"),
+            dim=EMBEDDING_DIM,
+            m=_PQ_M,
+            ksub=_PQ_KSUB,
+        ),
+        sources=("embeddings",),
+    )
 
 
 #: Registered PQ parameters: 16 subspaces × 32 codes = 80 bits
@@ -2117,7 +2078,7 @@ def q_similarity_topk_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     every comparison (m table lookups instead of a dim-wide dot;
     Jégou et al. 2011) and re-ranks the bounded ADC top-R exactly.
     Codebooks train on a BOUNDED deterministic sample once per
-    (process, sf_dir); encoding and ADC scoring are map-only; the
+    (session, sf_dir); encoding and ADC scoring are map-only; the
     only shuffle is the candidate tournament — at 100 TB the ADC scan
     reads 10-byte codes, not 256-byte vectors, and the raw-vector
     scan happens once for the |probes|·R candidate join
@@ -2147,9 +2108,6 @@ register(
 )
 
 
-_PQ_SAVED_BUILT: set[str] = set()  # sf_dirs whose PQ index is persisted
-
-
 def q_similarity_topk_pq_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAVED-index serving shape of the PQ tier: `..._pq_recall`
     re-trains codebooks and re-encodes the corpus per process — the
@@ -2158,14 +2116,15 @@ def q_similarity_topk_pq_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`save_pq_index`, the `save_ivf_index` discipline), and probes
     nightly: per-night cost is the ADC scan over the 25× smaller
     codes TABLE plus the bounded exact re-rank against the raw
-    vectors — no train, no count, no re-encode. Build runs at most
-    once per (process, sf_dir) so repeated invocations measure the
-    probe path; the registered readout is the same hash-checked 0.8
+    vectors — no train, no count, no re-encode. Build and index load
+    run at most once per (session, sf_dir) so repeated invocations
+    measure the probe path; the registered readout is the same hash-checked 0.8
     recall contract as the in-query twin (same codebooks by seed, so
     the saved index must answer exactly like the in-memory build;
     equality test-pinned in tests/test_dedup_similarity.py).
     Per-night decomposition vs the retrain path: BASELINE.md."""
     from gaming_ai_analytics_spark.operators.similarity import (
+        load_pq_index,
         pq_encode,
         save_pq_index,
         topk_similar,
@@ -2173,33 +2132,30 @@ def q_similarity_topk_pq_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gaming_ai_analytics_spark.sources.io import TableStore
 
-    import hashlib
-
     emb = load_table(spark, sf_dir, "embeddings")
     probes = _probes(spark, sf_dir)
-    store = TableStore(spark, _ivf_saved_dir(sf_dir))
-    name = f"pq{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    with _PQ_LOCK:
-        # path-existence check, not catalog.tableExists: save() writes
-        # path-based parquet (only save_bucketed registers catalog
-        # tables), so a catalog check would rebuild every construction
-        if sf_dir not in _PQ_SAVED_BUILT or not store.exists(
-            "idx", f"{name}_codes"
-        ):
-            books = _pq_codebooks_cached(spark, sf_dir)
-            coded = pq_encode(
-                emb.filter(F.col("embedding").isNotNull()),
-                books,
-                "vec_id",
-                "embedding",
-            )
-            save_pq_index(store, "idx", name, coded, books)
-            _PQ_SAVED_BUILT.add(sf_dir)
+    store = TableStore(spark, artifacts.workdir(sf_dir, "pqidx"))
+    name = f"pq{artifacts.token(sf_dir)}"
+
+    def build():
+        books = _pq_codebooks_cached(spark, sf_dir)
+        coded = pq_encode(
+            emb.filter(F.col("embedding").isNotNull()),
+            books,
+            "vec_id",
+            "embedding",
+        )
+        save_pq_index(store, "idx", name, coded, books)
+        return load_pq_index(spark, store, "idx", name)
+
+    # path-existence check, not catalog.tableExists: save() writes
+    # path-based parquet (only save_bucketed registers catalog tables)
+    index = artifacts.once(
+        spark, sf_dir, "pq_saved", build, sources=("embeddings",),
+        exists=lambda: store.exists("idx", f"{name}_codes"),
+    )
     ann = topk_similar_pq_saved(
-        spark,
-        store,
-        "idx",
-        name,
+        index,
         emb,
         probes,
         k=_TOPK_K,

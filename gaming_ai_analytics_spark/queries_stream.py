@@ -409,24 +409,6 @@ register(
 # --------------------------------------------------------------------------
 # Streaming materialized view (foreachBatch upsert sink)
 # --------------------------------------------------------------------------
-_MATVIEW_DIRS: dict[str, str] = {}  # sf_dir -> warehouse dir
-
-
-def _matview_dir(sf_dir: str) -> str:
-    """Process-lifetime temp warehouse for the streaming matview —
-    the `_fuzzy_index_dir` reuse-don't-leak pattern (created once per
-    sf, overwritten per invocation, removed at interpreter exit)."""
-    if sf_dir not in _MATVIEW_DIRS:
-        import atexit
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="gaa_matview_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _MATVIEW_DIRS[sf_dir] = d
-    return _MATVIEW_DIRS[sf_dir]
-
-
 def q_events_streaming_matview_upsert(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -448,6 +430,7 @@ def q_events_streaming_matview_upsert(
     class); each upsert rewrites only the serving table — Update
     mode re-emits changed keys, not the world, and the anti-join
     MERGE is keyed, not full-table."""
+    from gaming_ai_analytics_spark import artifacts
     from gaming_ai_analytics_spark.sources.io import TableStore
     from gaming_ai_analytics_spark.streaming.events import (
         stream_matview_upsert,
@@ -462,7 +445,7 @@ def q_events_streaming_matview_upsert(
             F.round(F.sum("value"), 2).alias("total_value"),
         )
     )
-    store = TableStore(spark, _matview_dir(sf_dir))
+    store = TableStore(spark, artifacts.workdir(sf_dir, "matview"))
     stream_matview_upsert(totals, store, "serve", "user_totals", ["user_id"])
     return store.load("serve", "user_totals")
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gaming_ai_analytics_spark import artifacts
 from gaming_ai_analytics_spark.functions.text import (
     doc_fingerprint,
     pii_match_count,
@@ -3319,26 +3320,6 @@ register(
 )
 
 
-_FUZZY_INDEX_DIRS: dict[str, str] = {}  # sf_dir -> warehouse dir
-
-
-def _fuzzy_index_dir(sf_dir: str) -> str:
-    """Process-lifetime temp warehouse for the persisted eval-side LSH
-    index, one slot per scale factor — the same reuse-don't-leak
-    pattern as queries_llm._lsh_index_dir (ADVICE r7): created once,
-    tables overwritten by every invocation at that sf, removed at
-    interpreter exit."""
-    if sf_dir not in _FUZZY_INDEX_DIRS:
-        import atexit
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="gaa_fuzzyidx_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _FUZZY_INDEX_DIRS[sf_dir] = d
-    return _FUZZY_INDEX_DIRS[sf_dir]
-
-
 def q_decontaminate_fuzzy_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3366,7 +3347,7 @@ def q_decontaminate_fuzzy_incremental(
 
     docs = _docs(spark, sf_dir)
     eval_set = docs.filter(F.col("source") == "src0")
-    store = TableStore(spark, _fuzzy_index_dir(sf_dir))
+    store = TableStore(spark, artifacts.workdir(sf_dir, "fuzzyidx"))
     save_minhash_index(
         store, "idx", "evalfx", eval_set, "doc_id", "text", num_buckets=8
     )
@@ -3738,23 +3719,6 @@ register(
 # --------------------------------------------------------------------------
 # BPE apply from a SAVED vocabulary (train-once / apply-nightly)
 # --------------------------------------------------------------------------
-_BPE_VOCAB_DIRS: dict[str, str] = {}  # sf_dir -> warehouse dir
-
-
-def _bpe_vocab_dir(sf_dir: str) -> str:
-    """Process-lifetime temp warehouse for the persisted tokenizer
-    vocabulary — the `_fuzzy_index_dir` reuse-don't-leak pattern."""
-    if sf_dir not in _BPE_VOCAB_DIRS:
-        import atexit
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="gaa_bpevocab_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _BPE_VOCAB_DIRS[sf_dir] = d
-    return _BPE_VOCAB_DIRS[sf_dir]
-
-
 def q_bpe_apply_saved_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production tokenizer shape: TRAIN once, PERSIST the priced
     vocabulary (word → trained-BPE token count), APPLY it to each
@@ -3777,7 +3741,7 @@ def q_bpe_apply_saved_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured in BASELINE.md §3 (tools/exp_bpe_apply.py)."""
     from gaming_ai_analytics_spark.sources.io import TableStore
 
-    store = TableStore(spark, _bpe_vocab_dir(sf_dir))
+    store = TableStore(spark, artifacts.workdir(sf_dir, "bpevocab"))
     wc = _word_counts(spark, sf_dir)
     _, state = bpe_train(wc, BPE_ROUNDS, return_state=True)
     store.save(
@@ -3835,53 +3799,6 @@ register(
 # end-to-end curation v2: rule gate -> span removal -> survivor-quality
 # dedup -> leakage-safe split -> BPE-priced packing (VERDICT r11 ask #4)
 # --------------------------------------------------------------------------
-_CURATION_V2_DIRS: dict[str, str] = {}  # sf_dir -> warehouse dir
-#: sf_dir -> source fingerprint the cleaned_fx table was built from
-#: (VERDICT r12 ask #3: the cached-or-build guard below)
-_CURATION_V2_BUILT: dict[str, str] = {}
-import threading as _threading  # noqa: E402  (module-local lock import)
-
-# RLock: `_cv2i_state` composes `_cv2_priced_vocab` while already
-# holding the guard — re-entry by the same thread must not deadlock
-_CURATION_V2_LOCK = _threading.RLock()
-
-
-def _curation_v2_dir(sf_dir: str) -> str:
-    """Process-lifetime temp warehouse for the pipeline's one
-    materialized stage boundary (the span-cleaned corpus) — the
-    reuse-don't-leak pattern of `_fuzzy_index_dir`."""
-    if sf_dir not in _CURATION_V2_DIRS:
-        import atexit
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="gaa_curv2_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _CURATION_V2_DIRS[sf_dir] = d
-    return _CURATION_V2_DIRS[sf_dir]
-
-
-def _cv2_source_fingerprint(sf_dir: str) -> str:
-    """Cheap staleness key for the cached stage-boundary table: the
-    (name, size, mtime) listing of the source documents parquet.  A
-    regenerated fixture drifts the fingerprint and forces a rebuild;
-    os.stat only — no Spark job."""
-    import os
-
-    p = os.path.join(sf_dir, "documents.parquet")
-    paths = [p]
-    if os.path.isdir(p):
-        paths = sorted(
-            os.path.join(r, f)
-            for r, _, fs in os.walk(p)
-            for f in fs
-            if not f.startswith((".", "_"))
-        )
-    return ";".join(
-        f"{q}:{os.stat(q).st_size}:{os.stat(q).st_mtime_ns}" for q in paths
-    )
-
-
 def _cv2_gated(
     spark: SparkSession, sf_dir: str, where: Column | None = None
 ) -> DataFrame:
@@ -3922,8 +3839,8 @@ def _cv2_cleaned(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-deriving in BASELINE.md / tools/exp_curation_v2.py).
 
     CACHED-OR-BUILD (VERDICT r12 ask #3): the build runs at most once
-    per (process, sf_dir, source fingerprint) under a lock — the
-    funnel twin and the pipeline share the table instead of each
+    per (session, sf_dir, source fingerprint) under ``artifacts.once``
+    — the funnel twin and the pipeline share the table instead of each
     re-running the gate + ExactSubstr job and racing on the same
     write path.  After the first build, constructing either v2 query
     is plan-only on this stage (the remaining plan-time execution —
@@ -3936,23 +3853,24 @@ def _cv2_cleaned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gaming_ai_analytics_spark.sources.io import TableStore
 
-    with _CURATION_V2_LOCK:
-        fp = _cv2_source_fingerprint(sf_dir)
-        store = TableStore(spark, _curation_v2_dir(sf_dir))
-        if _CURATION_V2_BUILT.get(sf_dir) != fp or not store.exists(
-            "cur", "cleaned_fx"
-        ):
-            cleaned = remove_duplicate_spans(
-                _cv2_gated(spark, sf_dir), carry=("source",)
-            ).select(
-                "doc_id",
-                "source",
-                "n_removed",
-                F.col("cleaned_text").alias("text"),
-            )
-            store.save("cur", "cleaned_fx", cleaned, mode="overwrite")
-            _CURATION_V2_BUILT[sf_dir] = fp
-    return store.load("cur", "cleaned_fx")
+    store = TableStore(spark, artifacts.workdir(sf_dir, "cv2_cleaned"))
+
+    def build():
+        cleaned = remove_duplicate_spans(
+            _cv2_gated(spark, sf_dir), carry=("source",)
+        ).select(
+            "doc_id",
+            "source",
+            "n_removed",
+            F.col("cleaned_text").alias("text"),
+        )
+        store.save("cur", "cleaned_fx", cleaned, mode="overwrite")
+        return store.load("cur", "cleaned_fx")
+
+    return artifacts.once(
+        spark, sf_dir, "cv2_cleaned", build, sources=("documents",),
+        exists=lambda: store.exists("cur", "cleaned_fx"),
+    )
 
 
 def _cv2_survivors(cl: DataFrame) -> DataFrame:
@@ -3982,10 +3900,6 @@ def _cv2_survivors(cl: DataFrame) -> DataFrame:
     return cl.join(F.broadcast(losers), "doc_id", "left_anti")
 
 
-#: sf_dir -> source fingerprint the vocab_fx table was built from
-_CV2_VOCAB_BUILT: dict[str, str] = {}
-
-
 def _cv2_priced_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """curation-v2 stage 5a: the tokenizer's priced vocabulary
     (word -> trained-BPE token count), trained ONCE on the raw corpus
@@ -3996,24 +3910,25 @@ def _cv2_priced_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     like tools/plan_audit.py — re-paid the full train."""
     from gaming_ai_analytics_spark.sources.io import TableStore
 
-    with _CURATION_V2_LOCK:
-        fp = _cv2_source_fingerprint(sf_dir)
-        store = TableStore(spark, _curation_v2_dir(sf_dir))
-        if _CV2_VOCAB_BUILT.get(sf_dir) != fp or not store.exists(
-            "cur", "vocab_fx"
-        ):
-            _, state = bpe_train(
-                _word_counts(spark, sf_dir), BPE_ROUNDS, return_state=True
-            )
-            store.save(
-                "cur",
-                "vocab_fx",
-                state.select(
-                    "w", F.size(F.split("seg", _BPE_SEP)).alias("_n_tok")
-                ),
-            )
-            _CV2_VOCAB_BUILT[sf_dir] = fp
-    return store.load("cur", "vocab_fx")
+    store = TableStore(spark, artifacts.workdir(sf_dir, "cv2_vocab"))
+
+    def build():
+        _, state = bpe_train(
+            _word_counts(spark, sf_dir), BPE_ROUNDS, return_state=True
+        )
+        store.save(
+            "cur",
+            "vocab_fx",
+            state.select(
+                "w", F.size(F.split("seg", _BPE_SEP)).alias("_n_tok")
+            ),
+        )
+        return store.load("cur", "vocab_fx")
+
+    return artifacts.once(
+        spark, sf_dir, "cv2_vocab", build, sources=("documents",),
+        exists=lambda: store.exists("cur", "vocab_fx"),
+    )
 
 
 def q_traindata_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4456,37 +4371,12 @@ register(
 # curation v2 INCREMENTAL: the nightly-increment composition over
 # persisted state (VERDICT r12 ask #2)
 # --------------------------------------------------------------------------
-_CV2I_DIRS: dict[str, str] = {}  # sf_dir -> state warehouse dir
-_CV2I_BUILT: dict[str, str] = {}  # sf_dir -> source fingerprint built
-
-
-def _cv2i_dir(sf_dir: str) -> str:
-    if sf_dir not in _CV2I_DIRS:
-        import atexit
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="gaa_curv2i_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _CV2I_DIRS[sf_dir] = d
-    return _CV2I_DIRS[sf_dir]
-
-
-def _cv2i_token(sf_dir: str) -> str:
-    """Stable per-sf suffix for the CATALOG-managed bucketed state
-    tables (band/shingle/gram indexes): managed table names are
-    process-global, so without this a build at one sf would be read
-    back by a cached probe at another."""
-    import hashlib
-
-    return hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-
-
 def _cv2i_state(spark: SparkSession, sf_dir: str):
     """Build-ONCE persisted curation state the nightly increment runs
-    against (cached-or-build under the same lock + source-fingerprint
-    guard as the full pipeline's stage boundary; rebuilt if the
-    session's catalog lost the bucketed tables):
+    against (``artifacts.once`` on the documents fingerprint, like the
+    full pipeline's stage boundary; rebuilt if the session's catalog
+    lost the bucketed tables).  Catalog-managed table names are
+    process-global, so they carry the ``artifacts.token`` sf suffix:
 
     - ``grams{tok}`` — the GATED corpus's distinct 8-gram presence
       set, bucketed on ``g`` (``distinct_kgrams``): the increment's
@@ -4510,71 +4400,69 @@ def _cv2i_state(spark: SparkSession, sf_dir: str):
     )
     from gaming_ai_analytics_spark.sources.io import TableStore
 
-    tok = _cv2i_token(sf_dir)
-    with _CURATION_V2_LOCK:
-        fp = _cv2_source_fingerprint(sf_dir)
-        store = TableStore(spark, _cv2i_dir(sf_dir))
-        if (
-            _CV2I_BUILT.get(sf_dir) != fp
-            or not store.exists("cur", "packstate_fx")
-            or not spark.catalog.tableExists(
-                store.table_name("cur", f"grams{tok}")
+    tok = artifacts.token(sf_dir)
+    store = TableStore(spark, artifacts.workdir(sf_dir, "curv2i"))
+
+    def build():
+        gated = _cv2_gated(
+            spark, sf_dir, where=F.col("doc_id") % 10 != 0
+        )
+        store.save_bucketed(
+            "cur", f"grams{tok}", distinct_kgrams(gated),
+            ["g"], 8, sort_cols=["g"],
+        )
+        cleaned = remove_duplicate_spans(
+            gated, carry=("source",)
+        ).select(
+            "doc_id",
+            "source",
+            "n_removed",
+            F.col("cleaned_text").alias("text"),
+        )
+        store.save("cur", "cleaned_fx", cleaned)
+        store.save(
+            "cur", "survivors_fx",
+            _cv2_survivors(store.load("cur", "cleaned_fx")),
+        )
+        surv = store.load("cur", "survivors_fx")
+        save_minhash_index(
+            store, "cur", f"surv{tok}", surv, "doc_id", "text",
+            num_buckets=8,
+        )
+        vocab = _cv2_priced_vocab(spark, sf_dir)
+        priced = (
+            surv.select(
+                "doc_id", F.explode(tokens(F.col("text"))).alias("w")
             )
-        ):
-            gated = _cv2_gated(
-                spark, sf_dir, where=F.col("doc_id") % 10 != 0
-            )
-            store.save_bucketed(
-                "cur", f"grams{tok}", distinct_kgrams(gated),
-                ["g"], 8, sort_cols=["g"],
-            )
-            cleaned = remove_duplicate_spans(
-                gated, carry=("source",)
-            ).select(
+            .join(F.broadcast(vocab), "w")
+            .groupBy("doc_id")
+            .agg(F.sum("_n_tok").cast("long").alias("n_bpe_tokens"))
+        )
+        packstate = (
+            surv.select(
                 "doc_id",
-                "source",
-                "n_removed",
-                F.col("cleaned_text").alias("text"),
+                split_assign(F.col("doc_id")).alias("split"),
+                (F.col("doc_id") % 8).cast("int").alias("shard"),
             )
-            store.save("cur", "cleaned_fx", cleaned)
-            store.save(
-                "cur", "survivors_fx",
-                _cv2_survivors(store.load("cur", "cleaned_fx")),
-            )
-            surv = store.load("cur", "survivors_fx")
-            save_minhash_index(
-                store, "cur", f"surv{tok}", surv, "doc_id", "text",
-                num_buckets=8,
-            )
-            vocab = _cv2_priced_vocab(spark, sf_dir)
-            priced = (
-                surv.select(
-                    "doc_id", F.explode(tokens(F.col("text"))).alias("w")
-                )
-                .join(F.broadcast(vocab), "w")
-                .groupBy("doc_id")
-                .agg(F.sum("_n_tok").cast("long").alias("n_bpe_tokens"))
-            )
-            packstate = (
-                surv.select(
-                    "doc_id",
-                    split_assign(F.col("doc_id")).alias("split"),
-                    (F.col("doc_id") % 8).cast("int").alias("shard"),
-                )
-                .join(priced, "doc_id")
-                .groupBy("split", "shard")
-                .agg(F.sum("n_bpe_tokens").cast("long").alias("base_cum"))
-            )
-            store.save("cur", "packstate_fx", packstate)
-            _CV2I_BUILT[sf_dir] = fp
-    return store
+            .join(priced, "doc_id")
+            .groupBy("split", "shard")
+            .agg(F.sum("n_bpe_tokens").cast("long").alias("base_cum"))
+        )
+        store.save("cur", "packstate_fx", packstate)
+        return store
+
+    return artifacts.once(
+        spark, sf_dir, "cv2i_state", build, sources=("documents",),
+        exists=lambda: store.exists("cur", "packstate_fx")
+        and spark.catalog.tableExists(store.table_name("cur", f"grams{tok}")),
+    )
 
 
 def _cv2i_inc_cleaned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The NIGHTLY batch's stage boundary: incremental ExactSubstr
     over the gated increment (within-increment df >= 2 OR present in
-    the persisted corpus gram set), MATERIALIZED once per (process,
-    sf_dir, source fingerprint) under the shared guard — the same
+    the persisted corpus gram set), MATERIALIZED once per (session,
+    sf_dir, source fingerprint) via ``artifacts.once`` — the same
     reason the full pipeline materializes its cleaned table: the
     survivor selection references it three times and pricing twice
     more, and re-deriving the span-removal subplan per reference is
@@ -4584,29 +4472,28 @@ def _cv2i_inc_cleaned(spark: SparkSession, sf_dir: str) -> DataFrame:
         remove_duplicate_spans,
     )
 
-    with _CURATION_V2_LOCK:
-        store = _cv2i_state(spark, sf_dir)
-        tok = _cv2i_token(sf_dir)
-        fp = _cv2_source_fingerprint(sf_dir)
-        if _CV2I_BUILT.get(sf_dir + "#inc") != fp or not store.exists(
-            "cur", "inc_cleaned_fx"
-        ):
-            inc_gated = _cv2_gated(
-                spark, sf_dir, where=F.col("doc_id") % 10 == 0
-            )
-            corpus_grams = spark.table(
-                store.table_name("cur", f"grams{tok}")
-            )
-            inc_cl = remove_duplicate_spans(
-                inc_gated, carry=("source",),
-                extra_flag_grams=corpus_grams,
-            ).select(
-                "doc_id", "source", "n_removed",
-                F.col("cleaned_text").alias("text"),
-            )
-            store.save("cur", "inc_cleaned_fx", inc_cl)
-            _CV2I_BUILT[sf_dir + "#inc"] = fp
-    return store.load("cur", "inc_cleaned_fx")
+    store = _cv2i_state(spark, sf_dir)
+    tok = artifacts.token(sf_dir)
+
+    def build():
+        inc_gated = _cv2_gated(
+            spark, sf_dir, where=F.col("doc_id") % 10 == 0
+        )
+        corpus_grams = spark.table(store.table_name("cur", f"grams{tok}"))
+        inc_cl = remove_duplicate_spans(
+            inc_gated, carry=("source",),
+            extra_flag_grams=corpus_grams,
+        ).select(
+            "doc_id", "source", "n_removed",
+            F.col("cleaned_text").alias("text"),
+        )
+        store.save("cur", "inc_cleaned_fx", inc_cl)
+        return store.load("cur", "inc_cleaned_fx")
+
+    return artifacts.once(
+        spark, sf_dir, "cv2i_inc_cleaned", build, sources=("documents",),
+        exists=lambda: store.exists("cur", "inc_cleaned_fx"),
+    )
 
 
 def _cv2i_keep(
@@ -4623,7 +4510,7 @@ def _cv2i_keep(
     )
 
     store = _cv2i_state(spark, sf_dir)
-    tok = _cv2i_token(sf_dir)
+    tok = artifacts.token(sf_dir)
     inc_cl = _cv2i_inc_cleaned(spark, sf_dir)
     inc_surv = _cv2_survivors(inc_cl)
     cross = minhash_lsh_pairs_incremental(

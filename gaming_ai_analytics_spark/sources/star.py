@@ -40,6 +40,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def forget_tables(sf_dir: str, names) -> None:
+    """Drop the cached frames of tables ``names`` at ``sf_dir``, under
+    any spelling of the directory, so the next :func:`load_table`
+    re-lists files that were rewritten since the first load."""
+    target = os.path.normpath(os.path.abspath(sf_dir))
+    stale = [
+        k
+        for k in _TABLE_CACHE
+        if k[2] in names
+        and os.path.normpath(os.path.abspath(k[1])) == target
+    ]
+    for k in stale:
+        del _TABLE_CACHE[k]
+
+
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 

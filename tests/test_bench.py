@@ -5,7 +5,8 @@ tier-2 child hit its 1800 s subprocess cap and the parent lost EVERY
 tier-2 comparator row to one exception. The child now streams one JSON
 line per finished query; the parent salvages those on timeout. The
 parser tests (no Spark session) pin the salvage parser's three regimes;
-the last test pins that a tier which raises is reported, not dropped.
+the last test pins that a tier which raises is reported, not dropped,
+and that the run records its host facts.
 """
 
 from __future__ import annotations
@@ -76,3 +77,5 @@ def test_raising_tier_records_its_error(
     assert out["tier2_error"].startswith("KeyError")
     assert out["tier2_duckdb_error"].startswith("KeyError")
     assert "duckdb_error" not in out and "concurrent_error" not in out
+    assert out["host_cpus"] >= 1 and out["host_mem_gb"] > 0
+    assert out["spark_version"] == spark.version

@@ -409,20 +409,20 @@ def test_ivf_index_persist_roundtrip(spark, tmp_path):
     c = sorted(
         tuple(r)
         for r in topk_similar_ivf_saved(
-            spark, store, "gold", "emb_ivf", probes, k=3, n_probe=4
+            (l_assigned, l_cents, meta), probes, k=3, n_probe=4
         ).collect()
     )
     assert c == a
     with pytest.raises(ValueError, match="exceeds the saved quantizer"):
         topk_similar_ivf_saved(
-            spark, store, "gold", "emb_ivf", probes, k=3, n_probe=999
+            (l_assigned, l_cents, meta), probes, k=3, n_probe=999
         )
     bad_dim = probes.select(
         "probe_id", F.slice("embedding", 1, 3).alias("embedding")
     )
     with pytest.raises(ValueError, match="dim"):
         topk_similar_ivf_saved(
-            spark, store, "gold", "emb_ivf", bad_dim, k=3, n_probe=4
+            (l_assigned, l_cents, meta), bad_dim, k=3, n_probe=4
         )
 
 
@@ -813,7 +813,8 @@ def test_duplicate_span_removal_planted(spark, tmp_path):
     assert out[4].cleaned_text == "too short" and out[4].n_removed == 0
 
 
-def test_span_removal_interval_complement_edges(spark):
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_span_removal_interval_complement_edges(spark, ansi):
     """r14: the coverage aggregate collects distinct STARTS and the
     kept positions are rebuilt as a map-side interval complement
     (dedup.remove_duplicate_spans). Pin the complement's edge cases
@@ -822,10 +823,8 @@ def test_span_removal_interval_complement_edges(spark):
     an unguarded head would emit [0,-1]), an OVERLAPPING start chain
     collapsing to one interval, a TAIL gap after the last interval,
     full coverage (doc vanishes), and an untouched doc (null-join
-    path keeps everything). ANSI mode is pinned on, so the untouched
-    doc's empty-starts path also proves that CaseWhen never evaluates
-    the slice/element_at branch: under ANSI both raise on an empty
-    array."""
+    path keeps everything). Run with ANSI mode on and off: the
+    untouched doc's empty-starts path must not raise in either."""
     from gaming_ai_analytics_spark.operators.dedup import (
         remove_duplicate_spans,
     )
@@ -841,7 +840,7 @@ def test_span_removal_interval_complement_edges(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     old = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
     try:
         got = {
             r.doc_id: (r.n_tokens, r.n_kept, r.n_removed, r.cleaned_text)
@@ -1013,7 +1012,7 @@ def test_pq_index_persist_roundtrip_and_meta_guard(spark, tmp_path):
     saved = {
         (r.probe_id, r.rank, r.vec_id, r.cosine)
         for r in topk_similar_pq_saved(
-            spark, store, "gold", "emb_pq", emb, probes, k=3
+            (coded, l_books, meta), emb, probes, k=3
         ).collect()
     }
     assert saved == direct
@@ -1023,9 +1022,7 @@ def test_pq_index_persist_roundtrip_and_meta_guard(spark, tmp_path):
         "probe_id", F.slice("embedding", 1, 32).alias("embedding")
     )
     with pytest.raises(ValueError, match="dim 32"):
-        topk_similar_pq_saved(
-            spark, store, "gold", "emb_pq", emb, bad, k=3
-        )
+        topk_similar_pq_saved((coded, l_books, meta), emb, bad, k=3)
 
     # torn index (codebook rows missing) fails the meta cross-check —
     # materialize the truncated rows first (overwriting a table from
@@ -1044,10 +1041,11 @@ def test_pq_saved_concurrent_construction_builds_once(spark):
     """The cached-or-build race pin (the curation-v2 discipline):
     constructing the PQ recall query and its saved-index twin
     CONCURRENTLY must share ONE codebook train and ONE index persist
-    under _PQ_LOCK — not race the sample collect or the codes-table
+    under artifacts.once — not race the sample collect or the codes-table
     write — and a second construction round is plan-only."""
     import concurrent.futures
 
+    from gaming_ai_analytics_spark import artifacts
     from gaming_ai_analytics_spark import queries_llm as ql
     from gaming_ai_analytics_spark.operators import similarity as sim
 
@@ -1064,9 +1062,7 @@ def test_pq_saved_concurrent_construction_builds_once(spark):
 
     sf = "/root/testdata/sf0.001"
     # force a fresh build for this sf_dir regardless of earlier tests
-    ql._PQ_BOOKS.pop(sf, None)
-    ql._PQ_SAVED_BUILT.discard(sf)
-    ql._IVF_SAVED_DIRS.pop(sf, None)
+    artifacts.clear()
     sim.train_pq_codebooks, sim.save_pq_index = counting_train, counting_save
     try:
         with concurrent.futures.ThreadPoolExecutor(2) as ex:

@@ -276,9 +276,11 @@ def test_orders_metric_view_definition_cached_per_session(spark, sf_dir):
     """r14 construction-floor fix: the orders MetricView is a
     long-lived definition — repeated constructions in one session
     must reuse the SAME instance (no temp-view re-registration, no
-    __mvN_ catalog leak), a different sf_dir must get its own, and
-    the consumer query must still compile fresh with identical
-    results across calls."""
+    __mvN_ catalog leak), a trailing slash names the same sf_dir, a
+    different sf_dir must get its own, and the consumer query must
+    still compile fresh with identical results across calls."""
+    from conftest import SF_ORACLE
+
     from gaming_ai_analytics_spark.queries_ext import (
         _orders_metric_view,
         q_metric_view_region,
@@ -287,7 +289,8 @@ def test_orders_metric_view_definition_cached_per_session(spark, sf_dir):
     mv1 = _orders_metric_view(spark, sf_dir)
     mv2 = _orders_metric_view(spark, sf_dir)
     assert mv1 is mv2
-    assert _orders_metric_view(spark, sf_dir + "/") is not mv1
+    assert _orders_metric_view(spark, sf_dir + "/") is mv1
+    assert _orders_metric_view(spark, SF_ORACLE) is not mv1
     a = sorted(map(tuple, q_metric_view_region(spark, sf_dir).collect()))
     b = sorted(map(tuple, q_metric_view_region(spark, sf_dir).collect()))
     assert a == b and a

@@ -1925,6 +1925,7 @@ def test_curation_v2_concurrent_construction_builds_once(spark):
     SECOND construction round is plan-only (no further builds)."""
     import concurrent.futures
 
+    from gaming_ai_analytics_spark import artifacts
     from gaming_ai_analytics_spark import queries_traindata as qt
 
     calls = []
@@ -1936,9 +1937,7 @@ def test_curation_v2_concurrent_construction_builds_once(spark):
 
     sf = "/root/testdata/sf0.001"
     # force a fresh build for this sf_dir regardless of earlier tests
-    qt._CURATION_V2_BUILT.pop(sf, None)
-    qt._CV2_VOCAB_BUILT.pop(sf, None)
-    qt._CURATION_V2_DIRS.pop(sf, None)
+    artifacts.clear()
     qt._cv2_gated = counting_gated
     try:
         with concurrent.futures.ThreadPoolExecutor(2) as ex:

@@ -40,6 +40,7 @@ def main() -> None:
 
     from gaming_ai_analytics_spark.operators.similarity import (
         build_ivf_index,
+        load_ivf_index,
         save_ivf_index,
         topk_similar_ivf,
         topk_similar_ivf_saved,
@@ -64,7 +65,10 @@ def main() -> None:
     a = sorted(
         tuple(r)
         for r in topk_similar_ivf_saved(
-            spark, store, "idx", "emb_exp", probes, k=5, n_probe=8
+            load_ivf_index(spark, store, "idx", "emb_exp"),
+            probes,
+            k=5,
+            n_probe=8,
         ).collect()
     )
     b = sorted(
@@ -75,7 +79,10 @@ def main() -> None:
 
     t0 = time.perf_counter()
     topk_similar_ivf_saved(
-        spark, store, "idx", "emb_exp", probes, k=5, n_probe=8
+        load_ivf_index(spark, store, "idx", "emb_exp"),
+        probes,
+        k=5,
+        n_probe=8,
     ).collect()
     t_probe_saved = time.perf_counter() - t0
 

@@ -41,6 +41,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from gaming_ai_analytics_spark.operators.similarity import (
+        load_pq_index,
         pq_encode,
         save_pq_index,
         topk_similar_pq,
@@ -69,7 +70,11 @@ def main() -> None:
     a = sorted(
         tuple(r)
         for r in topk_similar_pq_saved(
-            spark, store, "idx", "emb_exp", emb, probes, k=5, refine=20
+            load_pq_index(spark, store, "idx", "emb_exp"),
+            emb,
+            probes,
+            k=5,
+            refine=20,
         ).collect()
     )
     b = sorted(
@@ -83,7 +88,11 @@ def main() -> None:
 
     t0 = time.perf_counter()
     topk_similar_pq_saved(
-        spark, store, "idx", "emb_exp", emb, probes, k=5, refine=20
+        load_pq_index(spark, store, "idx", "emb_exp"),
+        emb,
+        probes,
+        k=5,
+        refine=20,
     ).collect()
     t_probe_saved = time.perf_counter() - t0
 

@@ -12,24 +12,23 @@ other query constructs side-effect-free):
   exactly what the audit should see and why it carries no
   MULTI_SCAN_JUSTIFIED entry (ADVICE r11).
 - `similarity_topk_pq_recall` trains its PQ codebooks at most once
-  per (process, sf_dir) during construction (queries_llm.py
-  `_pq_codebooks_cached`, RLock-serialized): one count + one bounded
-  ≤PQ_TRAIN_SAMPLE_ROWS sample collect, then numpy Lloyd's on the
-  driver — the winsorized-cuts class of bounded plan-time execution,
-  with no filesystem side effects.
-- `similarity_topk_pq_saved` additionally encodes and PERSISTS the
-  codes/codebooks/meta tables on FIRST construction per (process,
-  sf_dir) (same `_PQ_LOCK`, `tableExists`-guarded — the curation-v2
-  cached-or-build class); every later construction, including this
-  audit's, is plan-only reads of the persisted index.
+  per (session, sf_dir) during construction (`artifacts.once`): one
+  count + one bounded ≤PQ_TRAIN_SAMPLE_ROWS sample collect, then numpy
+  Lloyd's on the driver — the winsorized-cuts class of bounded
+  plan-time execution, with no filesystem side effects.
+- `similarity_topk_pq_saved` / `similarity_topk_ivf_saved` encode (or
+  train) and PERSIST their index tables on FIRST construction per
+  (session, sf_dir) (`artifacts.once`, guarded on the tables still
+  existing — the curation-v2 cached-or-build class); every later
+  construction, including this audit's, reuses the loaded index.
 - `traindata_curation_v2` / `curation_funnel_v2` /
   `traindata_curation_v2_incremental`: the FIRST construction per
   (process, sf_dir) runs the rule gate + ExactSubstr span-removal
   job(s) and the BPE train, materializing the pipeline's
   stage-boundary tables (the incremental additionally builds its
   persisted corpus state: gram presence set, survivor MinHash index,
-  packing offsets).  All builds are cached-or-build under one RLock
-  keyed on the source-parquet fingerprint (queries_traindata.py
+  packing offsets).  All builds go through `artifacts.once`, keyed on
+  the source-parquet fingerprint (queries_traindata.py
   `_cv2_cleaned` / `_cv2_priced_vocab` / `_cv2i_state` /
   `_cv2i_inc_cleaned`), so the queries share the tables instead of
   racing on the write path, and every construction after the first —
