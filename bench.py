@@ -58,7 +58,10 @@ except OSError:  # platform without getloadavg
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-from gaming_ai_analytics_spark.session import cpus  # noqa: E402
+from gaming_ai_analytics_spark.session import (  # noqa: E402
+    codegen_compiles,
+    cpus,
+)
 
 #: Representative heavy paths across the operator surface.
 HEADLINE = [
@@ -297,6 +300,22 @@ def main() -> None:
 
     qs.setdefault("similarity_topk_lsh", q_similarity_topk_lsh)
 
+    # "<tier>_codegen_compiles" -> Janino compilations during that
+    # tier's timed runs (warm passes and cold runs excluded): a warm
+    # run that compiles is a generated-class cache miss
+    compiles: dict[str, int] = {}
+
+    def timed(tier: str, run) -> float:
+        """Seconds of one timed ``run()``, counting its compilations
+        into ``compiles``."""
+        c0 = codegen_compiles(spark)
+        t0 = time.perf_counter()
+        run()
+        dt = time.perf_counter() - t0
+        key = f"{tier}_codegen_compiles"
+        compiles[key] = compiles.get(key, 0) + codegen_compiles(spark) - c0
+        return dt
+
     # global warm pass FIRST: plan construction, parquet footer index,
     # and — the big one — JIT compilation of the shared codegen/shuffle/
     # scan machinery. Measuring each query right after only its own
@@ -308,22 +327,24 @@ def main() -> None:
     timings: dict[str, float] = {}
     for name in HEADLINE:
         fn = qs[name]
-        runs = []
-        for _ in range(WARM_RUNS):
-            t0 = time.perf_counter()
-            materialize(fn(spark, sf_dir))  # warm: steady state
-            runs.append(time.perf_counter() - t0)
+        runs = [  # warm: steady state
+            timed("tier1", lambda: materialize(fn(spark, sf_dir)))
+            for _ in range(WARM_RUNS)
+        ]
         timings[name] = round(statistics.median(runs), 3)
 
     # context measurement — a concurrency hiccup must not cost the
     # sequential `value` already collected above
     try:
-        t0 = time.perf_counter()
-        with ThreadPoolExecutor(len(HEADLINE)) as ex:
-            list(
-                ex.map(lambda n: materialize(qs[n](spark, sf_dir)), HEADLINE)
-            )
-        concurrent_wall = round(time.perf_counter() - t0, 3)
+        def submit_all() -> None:
+            with ThreadPoolExecutor(len(HEADLINE)) as ex:
+                list(
+                    ex.map(
+                        lambda n: materialize(qs[n](spark, sf_dir)), HEADLINE
+                    )
+                )
+
+        concurrent_wall = round(timed("concurrent", submit_all), 3)
     except Exception as e:
         errors["concurrent_error"] = repr(e)
         concurrent_wall = None
@@ -336,11 +357,11 @@ def main() -> None:
             materialize(qs[name](spark, sf_dir))
         tier2_timings = {}
         for name in TIER2:
-            runs = []
-            for _ in range(WARM_RUNS):
-                t0 = time.perf_counter()
-                materialize(qs[name](spark, sf_dir))
-                runs.append(time.perf_counter() - t0)
+            fn = qs[name]
+            runs = [
+                timed("tier2", lambda: materialize(fn(spark, sf_dir)))
+                for _ in range(WARM_RUNS)
+            ]
             tier2_timings[name] = round(statistics.median(runs), 3)
     except Exception as e:
         errors["tier2_error"] = repr(e)
@@ -363,11 +384,10 @@ def main() -> None:
             for name in HEADLINE:
                 fn = qs[name]
                 materialize(fn(spark, sf1_dir))  # cold
-                runs = []
-                for _ in range(WARM_RUNS):
-                    t0 = time.perf_counter()
-                    materialize(fn(spark, sf1_dir))
-                    runs.append(time.perf_counter() - t0)
+                runs = [
+                    timed("sf1", lambda: materialize(fn(spark, sf1_dir)))
+                    for _ in range(WARM_RUNS)
+                ]
                 sf1_timings[name] = round(statistics.median(runs), 3)
         except Exception as e:
             errors["sf1_error"] = repr(e)
@@ -383,9 +403,10 @@ def main() -> None:
             for name in TIER2:
                 fn = qs[name]
                 materialize(fn(spark, sf1_dir))  # cold
-                t0 = time.perf_counter()
-                materialize(fn(spark, sf1_dir))
-                sf1_tier2[name] = round(time.perf_counter() - t0, 3)
+                sf1_tier2[name] = round(
+                    timed("sf1_tier2", lambda: materialize(fn(spark, sf1_dir))),
+                    3,
+                )
         except Exception as e:
             errors["sf1_tier2_error"] = repr(e)
             sf1_tier2 = None
@@ -410,9 +431,9 @@ def main() -> None:
                     .save()
                 )
                 sink(fn(spark, sf10_dir))  # cold
-                t0 = time.perf_counter()
-                sink(fn(spark, sf10_dir))
-                sf10_timings[name] = round(time.perf_counter() - t0, 3)
+                sf10_timings[name] = round(
+                    timed("sf10", lambda: sink(fn(spark, sf10_dir))), 3
+                )
         except Exception as e:
             errors["sf10_error"] = repr(e)
             sf10_timings = None
@@ -554,6 +575,7 @@ def main() -> None:
     if sf10_timings:
         out["sf10_total_warm"] = round(sum(sf10_timings.values()), 3)
         out["sf10_queries"] = sf10_timings
+    out.update(compiles)
     out.update(errors)
     try:  # end-of-run load closes the contamination bracket
         out["load_avg_end"] = round(os.getloadavg()[0], 2)

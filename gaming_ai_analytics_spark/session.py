@@ -14,7 +14,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["cpus", "get_spark"]
+__all__ = ["codegen_compiles", "cpus", "get_spark"]
 
 # A cost-based "static plan below N bytes" adaptive-execution gate
 # (sub-GB inputs on a newSession child with AQE off) was built and
@@ -31,6 +31,14 @@ __all__ = ["cpus", "get_spark"]
 def cpus() -> int:
     """Local core count: ``$SPARK_GRAFT_CPUS``, else the host's."""
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compilations this JVM has run so far: one per miss of
+    Spark's generated-class cache (``CodegenMetrics``' compilation-time
+    histogram count)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def get_spark(
@@ -77,6 +85,26 @@ def get_spark(
         # (sources/pyds.py turns them into generator-range pruning)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # Spark keeps at most 100 generated classes (LRU). Measured on
+        # perfbench's sf0.1 fixture: one 12-query dashboard deck
+        # generates ~200 distinct classes and a dashboard + curation
+        # round ~330, so at 100 every repeated query missed and
+        # recompiled (210 Janino compilations per steady-state deck,
+        # then a fresh class for HotSpot to JIT again). 1000 holds that
+        # working set with room to spare; one pass over all 253
+        # registered queries generates ~2,500, so a session cycling
+        # through the whole registry still evicts. Static conf: read
+        # once, when the JVM's CodeGenerator is first used, so it only
+        # takes effect here at session build.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # The cache is keyed on the generated source, and by default
+        # the class name carries the whole-stage codegen stage id. AQE
+        # numbers stages in the order they are created, which follows
+        # the order their inputs finish, so a repeated query can number
+        # the same stages differently and miss (dau_mau_stickiness: 18
+        # recompiles on some re-runs). Without the id in the name, the
+        # same stage compiles to the same source.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")

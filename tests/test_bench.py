@@ -6,7 +6,7 @@ tier-2 comparator row to one exception. The child now streams one JSON
 line per finished query; the parent salvages those on timeout. The
 parser tests (no Spark session) pin the salvage parser's three regimes;
 the last test pins that a tier which raises is reported, not dropped,
-and that the run records its host facts.
+and that the run records its host facts and tier-1 codegen count.
 """
 
 from __future__ import annotations
@@ -79,3 +79,5 @@ def test_raising_tier_records_its_error(
     assert "duckdb_error" not in out and "concurrent_error" not in out
     assert out["host_cpus"] >= 1 and out["host_mem_gb"] > 0
     assert out["spark_version"] == spark.version
+    assert isinstance(out["tier1_codegen_compiles"], int)
+    assert out["tier1_codegen_compiles"] >= 0

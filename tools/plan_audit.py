@@ -52,6 +52,12 @@ It reports:
 - **cartesian**: a CartesianProduct node anywhere (a broadcast 1-row
   stat frame plans as BroadcastNestedLoopJoin with `keys=[]`, which
   is fine; a true cartesian is not).
+- **unpartitioned window**: a Window with an empty partition spec —
+  Spark's "No Partition Defined for Window" warning: every input row
+  moves to one partition and one task.  Each query that has one is
+  listed in UNPARTITIONED_WINDOW, either as bounded (the window runs
+  over an aggregate-sized frame) or as a follow-up (its frame grows
+  with the data; reported, not failed, until its plan is reworked).
 
 Exit code 1 if any UNJUSTIFIED finding remains, so the audit can gate
 a round. Run: ``python tools/plan_audit.py [sf_dir] [--json out]``.
@@ -376,6 +382,95 @@ MULTI_SCAN_JUSTIFIED: dict[str, tuple[dict[str, int], str]] = {
 }
 
 
+#: Queries with Windows over an empty partition spec: (at most this
+#: many such Windows, "bounded" | "follow-up", why). "bounded": the
+#: window's input is already reduced to an aggregate-sized frame, so
+#: the single partition holds O(groups) rows, never O(data).
+#: "follow-up": the single-partition frame grows with the data.
+UNPARTITIONED_WINDOW: dict[str, tuple[int, str, str]] = {
+    "benford_price_digits": (
+        1, "bounded", "leading-digit shares over the 9-row digit counts",
+    ),
+    "dau_mau_stickiness": (
+        1,
+        "bounded",
+        "MAU prefix sum over the island-edge day points: at most "
+        "2x|calendar days| rows, never the activity frame",
+    ),
+    "forecast_seasonal_backtest": (
+        1,
+        "bounded",
+        "split day (global max) over the |event types| x |days| daily "
+        "frame",
+    ),
+    "mixture_rebalance": (
+        1, "bounded", "corpus totals over the |sources|-row counts",
+    ),
+    "mixture_temperature_weights": (
+        2,
+        "bounded",
+        "share and temperature normalisers over the |sources|-row "
+        "token counts",
+    ),
+    "mixture_unimax_budget": (
+        3,
+        "bounded",
+        "rank, prefix sum and totals over the |sources| x |langs| "
+        "cell counts",
+    ),
+    "pareto_revenue_share": (
+        1,
+        "bounded",
+        "rank and running share over the 20-row post-limit frame",
+    ),
+    "quality_classifier_distill": (
+        1,
+        "bounded",
+        "AUC negatives-below prefix over the <= 10^d + 1 rounded-score "
+        "rows (operators/classifier.py)",
+    ),
+    "quality_psi_drift": (
+        1, "bounded", "bin shares over the 10 PSI bins",
+    ),
+    "timeseries_gap_fill": (
+        1,
+        "bounded",
+        "global spine bounds over the |categories|-row per-category "
+        "bounds (operators/analytics.py)",
+    ),
+    "token_budget_select": (
+        1,
+        "bounded",
+        "band prefix sum over the <= 20 quality-band totals",
+    ),
+    "approx_topk_contract": (
+        1,
+        "follow-up",
+        "global row_number over one row per supplier key: grows with "
+        "the supplier dimension (10k per SF)",
+    ),
+    "supplier_value_concentration": (
+        1,
+        "follow-up",
+        "grand total over one row per supplier key: grows with the "
+        "supplier dimension; a 1-row aggregate broadcast back must "
+        "still scan the fact once",
+    ),
+    "top_supplier_revenue": (
+        1,
+        "follow-up",
+        "max over one row per supplier key: as "
+        "supplier_value_concentration",
+    ),
+    "doc_rarity_score": (
+        1,
+        "follow-up",
+        "document count N over the per-document relation: one row per "
+        "document, data-sized",
+    ),
+}
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     json_out = None
@@ -391,6 +486,7 @@ def main() -> int:
 
     findings: list[dict] = []
     justified: list[dict] = []
+    windows: dict[str, list[dict]] = {"bounded": [], "follow-up": []}
     n_checked = 0
 
     def jnodes(n):
@@ -431,9 +527,12 @@ def main() -> int:
                     {"query": name, "kind": "multi-scan", "detail": multi, "reason": reason}
                 )
 
-        # serialized BNL + cartesian
+        # serialized BNL + cartesian + unpartitioned windows
+        n_global = 0
         for node in jnodes(plan):
             nn = node.nodeName()
+            if nn == "Window" and node.partitionSpec().isEmpty():
+                n_global += 1
             if nn == "CartesianProduct":
                 findings.append(
                     {"query": name, "kind": "cartesian", "detail": nn}
@@ -457,18 +556,35 @@ def main() -> int:
                         }
                     )
 
+        if n_global:
+            allowed, kind, reason = UNPARTITIONED_WINDOW.get(name, (0, "", ""))
+            if n_global > allowed:
+                findings.append(
+                    {"query": name, "kind": "unpartitioned-window", "detail": n_global}
+                )
+            else:
+                windows[kind].append(
+                    {"query": name, "windows": n_global, "reason": reason}
+                )
+
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 
     report = {
         "checked": n_checked,
         "findings": findings,
         "justified_multi_scan": justified,
+        "bounded_unpartitioned_window": windows["bounded"],
+        "follow_up_unpartitioned_window": windows["follow-up"],
     }
     for f in findings:
         print(f"[FINDING] {f['query']}: {f['kind']} {f['detail']}")
+    for w in windows["follow-up"]:
+        print(f"[FOLLOW-UP] {w['query']}: {w['windows']} unpartitioned window(s)")
     print(
         f"{n_checked} queries audited; {len(findings)} unjustified findings; "
-        f"{len(justified)} justified multi-scan queries"
+        f"{len(justified)} justified multi-scan queries; "
+        f"{len(windows['bounded'])} bounded and {len(windows['follow-up'])} "
+        "follow-up unpartitioned-window queries"
     )
     if json_out:
         with open(json_out, "w") as fh:
