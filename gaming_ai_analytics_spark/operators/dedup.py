@@ -8,7 +8,7 @@ is the standard large-corpus design expressed Spark-first:
 - exact: hash-groupBy on a normalized-text fingerprint (one shuffle).
 - n-gram Jaccard: inverted-index self-join on shingles — the exact
   pairwise formulation; quadratic only within a shingle's posting
-  list, so hot shingles can be capped (``max_shingle_df``).
+  list.
 - MinHash + LSH: shingle→minhash signature→banding→bucket join —
   candidate generation is linear-ish in corpus size; candidates are
   verified with exact Jaccard. The 100 TB path.
@@ -36,62 +36,22 @@ from gaming_ai_analytics_spark.functions.text import (
     word_shingles,
 )
 from gaming_ai_analytics_spark.functions.vectors import dot
+from gaming_ai_analytics_spark.operators import gates
 from gaming_ai_analytics_spark.operators.parallelism import ensure_parallelism
-
-
-#: Below this Catalyst estimate of the SOURCE frame, join strategy is
-#: left to the planner: even a ~20× exploded broadcast build is then
-#: ≤ ~100 MB and measured faster (BASELINE.md §3: minhash sf0.1
-#: 1.0 s planner vs 1.8 s hinted).  At or above it, the estimate can
-#: no longer be trusted THROUGH an explode (fan-out is invisible to
-#: sizeInBytes, so the planner broadcast a ~3.3 GiB exploded posting
-#: frame at sf10 and OOMed) and every self-join in this module is
-#: pinned shuffle_hash.  Unknown sizes (LocalRelation reports
-#: Long.MaxValue; any py4j hiccup returns None) take the scale-safe
-#: hint path — which also means unit tests on createDataFrame inputs
-#: exercise the hinted plans while the sf0.01/sf0.1 driver runs
-#: exercise the planner path, covering both.
-PLANNER_TRUST_MAX_BYTES = 4 << 20
-
-#: Source-size gate for routing exact containment through the lossless
-#: PPJoin prefix tier (see containment_pairs, r14 note): the prefix
-#: tier pays fixed corpus-wide window + checkpoint overhead but its
-#: candidate/verify cost grows with the PRUNED candidate set, while
-#: the count-from-join tier's pair aggregate grows with EVERY
-#: colliding pair (no sound length filter exists for the asymmetric
-#: measure). Units are Catalyst sizeInBytes ESTIMATES (post-filter
-#: compressed-scan bytes — the same currency as
-#: PLANNER_TRUST_MAX_BYTES), not raw file sizes. Measured crossover
-#: on this corpus family sits between sf0.1 (estimate 0.59 MB, files
-#: 26 MB: 1.88 s count-from-join vs 2.73 s prefix) and sf1 (estimate
-#: 5.8 MB, files 260 MB: 49.3 s vs 21.6 s); 4 MB splits it, and
-#: matching the planner-trust gate means the prefix tier engages
-#: exactly where this module stops trusting toy-size planning.
-CONTAINMENT_PREFIX_MIN_BYTES = 4 << 20
-
-
-def _source_bytes(df: DataFrame) -> int | None:
-    """Catalyst's size estimate for ``df``'s optimized plan (file-scan
-    bytes for parquet sources), or None when unavailable."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — internal API; unknown = big
-        return None
 
 
 def _self_join_hinter(df: DataFrame, strategy: str = "shuffle_hash"):
     """Return a frame-wrapper pinning a join strategy on the module's
     corpus-sized self-joins unless the source is provably toy-sized
-    (see PLANNER_TRUST_MAX_BYTES).  ``shuffle_hash`` (default) for
-    joins whose per-partition build side is modest (candidate pairs,
-    per-doc array lookups); ``merge`` for joins of two FULL posting
-    frames, where a shuffle-hash build map is itself corpus-scale per
-    partition (the r8 sf10 heap-OOM class) — sort-merge spills to
-    disk instead."""
-    size = _source_bytes(df)
-    if size is not None and size < PLANNER_TRUST_MAX_BYTES:
-        return lambda frame: frame
-    return lambda frame: frame.hint(strategy)
+    (the ``planner-trust`` gate, operators/gates.py).  ``shuffle_hash``
+    (default) for joins whose per-partition build side is modest
+    (candidate pairs, per-doc array lookups); ``merge`` for joins of
+    two FULL posting frames, where a shuffle-hash build map is itself
+    corpus-scale per partition (the r8 sf10 heap-OOM class) —
+    sort-merge spills to disk instead."""
+    if gates.large("planner-trust", df):
+        return lambda frame: frame.hint(strategy)
+    return lambda frame: frame
 
 
 # --------------------------------------------------------------------------
@@ -122,30 +82,12 @@ def exact_dedup_canonical(
 # --------------------------------------------------------------------------
 # n-gram Jaccard (exact pairwise via inverted index)
 # --------------------------------------------------------------------------
-def _surviving_postings_and_sizes(
-    df: DataFrame, id_col: str, text_col: str, k: int, max_shingle_df: int
-) -> tuple[DataFrame, DataFrame]:
-    """Legacy stop-shingle scaffold shared by both exact tiers
-    (ADVICE r13): postings with document frequency ≤ ``max_shingle_df``
-    plus the per-doc SURVIVING-posting counts (which is why this path
-    keeps the aggregate-and-join shape rather than carried sizes)."""
-    sh = ensure_parallelism(df).select(
-        F.col(id_col).alias("_id"),
-        F.explode(word_shingles(F.col(text_col), k)).alias("_sh"),
-    ).withColumn(
-        "_df", F.count(F.lit(1)).over(Window.partitionBy("_sh"))
-    ).filter(F.col("_df") <= max_shingle_df).drop("_df")
-    sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("_n"))
-    return sh, sizes
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     k: int = 3,
     threshold: float = 0.5,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """All document pairs with shingle-Jaccard ≥ threshold.
 
@@ -153,13 +95,8 @@ def ngram_jaccard_pairs(
     postings (id_a < id_b), count common shingles per pair, then
     |A∪B| = |A| + |B| − common. Exact — the oracle for the LSH variant.
 
-    ``max_shingle_df`` drops shingles appearing in more than N docs
-    (stop-shingles create quadratic posting lists at corpus scale;
-    dropping them is the standard recall-safe-ish cap — pairs sharing
-    ONLY ubiquitous shingles are the ones you didn't want anyway).
-
     The posting self-join carries an explicit SHUFFLE_HASH hint above
-    the toy-corpus gate (``PLANNER_TRUST_MAX_BYTES``) — the one class
+    the toy-corpus gate (``planner-trust``) — the one class
     of places this library overrides the planner's join choice, found
     the hard way by the r7 sf10 probe: Catalyst estimates the join
     input from the PRE-explode scan/exchange bytes (explode fan-out
@@ -176,7 +113,7 @@ def ngram_jaccard_pairs(
     planner's broadcast genuinely wins (sf0.1 1.0 vs 1.8 s hinted),
     which is why tiny sources are left alone.
 
-    r13 (no ``max_shingle_df``): the per-doc shingle count is
+    r13: the per-doc shingle count is
     ``size(word_shingles(text,k))`` — the shingle array is already
     distinct — so ``|A|``/``|B|`` ride each posting row map-side
     instead of a separate corpus-sized ``groupBy(_id)`` aggregation
@@ -189,8 +126,7 @@ def ngram_jaccard_pairs(
     ``round(jac,6) ≥ t`` filter (round is monotone and HALF_UP:
     ``jac ≤ min/max < t−1e-6 ⟹ round(jac,6) < t``) and is dropped
     before the pair exchange — candidate pruning with zero recall
-    loss. With ``max_shingle_df`` the doc size must count SURVIVING
-    postings, so that path keeps the aggregate-and-join shape.
+    loss.
 
     r14, two measured-and-rejected rewrites (numbers in
     OPTIMIZATION_r14.md): (1) identical-set collapse — group docs by
@@ -211,34 +147,7 @@ def ngram_jaccard_pairs(
     _hint = _self_join_hinter(df)
     jac = F.col("_common") / (F.col("_na") + F.col("_nb") - F.col("_common"))
 
-    if max_shingle_df is not None:
-        sh, sizes = _surviving_postings_and_sizes(
-            df, id_col, text_col, k, max_shingle_df
-        )
-        a, b = _hint(sh).alias("a"), _hint(sh).alias("b")
-        common = (
-            a.join(b, (F.col("a._sh") == F.col("b._sh")) & (F.col("a._id") < F.col("b._id")))
-            .groupBy(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("_common"))
-        )
-        # sizes is |corpus| rows — hinted for the same reason as the
-        # posting join (a broadcast build map of every doc id cannot be
-        # right at scale; AQE keeps the small-SF cost negligible)
-        sa = _hint(sizes).select(
-            F.col("_id").alias("id_a"), F.col("_n").alias("_na")
-        )
-        sb = _hint(sizes).select(
-            F.col("_id").alias("id_b"), F.col("_n").alias("_nb")
-        )
-        return (
-            common.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn("jaccard", F.round(jac, 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-
-    # fast path: sizes carried on the posting rows (array built once in
+    # sizes carried on the posting rows (array built once in
     # the child Project — CollapseProject keeps multiply-referenced
     # non-cheap aliases un-inlined, verified in plans/r13/).
     # explode_OUTER, deliberately: plain explode lets
@@ -633,7 +542,7 @@ def minhash_lsh_pairs_incremental(
     anti-join).
 
     The increment side rides the module's explode-aware size gate
-    (``PLANNER_TRUST_MAX_BYTES``): its band frame is a bands× explode
+    (``planner-trust``): its band frame is a bands× explode
     whose fan-out Catalyst's estimate cannot see, so a LARGE increment
     is pinned ``shuffle_hash`` instead of letting the planner broadcast
     a corpus-scale frame (the sf10 OOM class). Bucket the session's
@@ -967,14 +876,6 @@ def simhash_near_pairs(
 # --------------------------------------------------------------------------
 # embedding cosine near-dup
 # --------------------------------------------------------------------------
-#: Upper bound for the Arrow exact tier: the matmul path collects the
-#: corpus to the driver, so it engages only while that stays cheap
-#: (~10⁵ 64-dim vectors ≈ 50 MB). Past it the exact tier is the wrong
-#: tool regardless — the module docstring and the LSH variant are the
-#: scale path — and the BNL form at least needs no driver memory.
-ARROW_EXACT_MAX_BYTES = 256 << 20
-
-
 def embedding_cosine_pairs(
     df: DataFrame, id_col: str, vec_col: str, threshold: float = 0.9
 ) -> DataFrame:
@@ -983,13 +884,13 @@ def embedding_cosine_pairs(
 
     Two physical strategies by corpus size (same contract):
 
-    - small (< ``ARROW_FANOUT_MIN_BYTES``): broadcast nested-loop join
+    - small (below the ``arrow-fanout`` gate): broadcast nested-loop join
       with the JVM expression-fold dot — exact oracle parity, zero
       Python. The streamed side is widened first: BNL parallelism is
       the streamed side's split count, and a 1-2-split scan serialized
       the entire n² dot work onto 2 cores (observed hanging the sf1
       sweep).
-    - mid (up to ``ARROW_EXACT_MAX_BYTES``): the corpus collects to
+    - mid (up to the ``arrow-exact-max`` bound): the corpus collects to
       the driver as a matmul matrix and each Arrow batch scores its
       rows against ALL vectors in one numpy call, thresholding INSIDE
       the kernel so only surviving (id_b, cosine) hits cross the Arrow
@@ -1005,25 +906,19 @@ def embedding_cosine_pairs(
     a = ensure_parallelism(
         df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     )
-    from gaming_ai_analytics_spark.operators.parallelism import (
-        ARROW_FANOUT_MIN_BYTES,
-        est_bytes,
-    )
-
-    est = est_bytes(a)
-    if est >= ARROW_EXACT_MAX_BYTES:
+    if gates.large("arrow-exact-max", a):
         # Refuse to fall through to the O(n²) theta self-join at
         # corpus scale — that plan is only ever an oracle/test tier.
         # (r5 verdict soft spot: the silent fallback here would let a
         # 100 TB caller run an all-pairs BNL by accident.)
         raise ValueError(
             f"embedding_cosine_pairs is the exact O(n²) tier; corpus "
-            f"≈ {est >> 20} MiB exceeds ARROW_EXACT_MAX_BYTES "
-            f"({ARROW_EXACT_MAX_BYTES >> 20} MiB). Use "
+            f"≈ {gates.estimate(a) >> 20} MiB reaches its "
+            f"{gates.THRESHOLDS['arrow-exact-max'] >> 20} MiB bound. Use "
             "embedding_cosine_pairs_lsh (banded candidate generation "
             "+ exact verification) at this scale."
         )
-    if ARROW_FANOUT_MIN_BYTES <= est:
+    if gates.large("arrow-fanout", a):
         rows = [
             r
             for r in df.select(F.col(id_col), F.col(vec_col)).collect()
@@ -1145,25 +1040,10 @@ def _rhp_signature_arrow(vec_col: Column, planes: np.ndarray) -> Column:
     )
 
 
-#: Above this estimated row count the Arrow kernel wins over the
-#: interpreted expression fold (below it, Arrow transfer + Python
-#: worker dispatch dominate). Measured on the 64-dim × 16-plane
-#: battery: Arrow is already 2× faster at 2k rows (the per-row work —
-#: n_planes interpreted dot folds — is heavy), so the crossover sits
-#: low; only genuinely tiny inputs keep the expression form.
-ARROW_SIG_MIN_ROWS = 2_000
-
-
-def _rhp_sig_auto(
-    df: DataFrame, vec_col: str, planes: np.ndarray, arrow: bool | None
-) -> Column:
-    """Pick the SRP signature implementation. ``arrow=None`` decides
-    from Catalyst's size statistics (driver-side metadata — no job):
-    estimated rows = sizeInBytes / bytes-per-row-lower-bound."""
-    if arrow is None:
-        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        dim = planes.shape[1]
-        arrow = int(str(size)) > ARROW_SIG_MIN_ROWS * (4 * dim)
+def _rhp_sig_auto(df: DataFrame, vec_col: str, planes: np.ndarray) -> Column:
+    """Pick the SRP signature implementation by the ``arrow-signature``
+    gate: estimated rows = estimate / the 4·dim-byte row lower bound."""
+    arrow = gates.large("arrow-signature", df, per_row=4 * planes.shape[1])
     fn = _rhp_signature_arrow if arrow else _rhp_signature
     return fn(F.col(vec_col), planes)
 
@@ -1176,7 +1056,6 @@ def embedding_cosine_pairs_lsh(
     n_planes: int = 16,
     bands: int = 4,
     dim: int | None = None,
-    arrow: bool | None = None,
 ) -> DataFrame:
     """Scale path: random-hyperplane LSH buckets candidate pairs
     (cosine-similar vectors agree on most hyperplane signs →
@@ -1184,9 +1063,8 @@ def embedding_cosine_pairs_lsh(
     Deterministic planes (fixed seed) — reruns give identical plans.
 
     Pass ``dim`` (the vector length) so plan construction stays
-    action-free; omitting it falls back to a one-row probe job.
-    ``arrow`` selects the SRP signature kernel (None = auto from size
-    statistics; see :func:`_rhp_sig_auto`)."""
+    action-free; omitting it falls back to a one-row probe job. The
+    SRP signature kernel is picked by :func:`_rhp_sig_auto`."""
     if dim is None:  # fallback only — callers should pass the dim
         dim = len(df.select(vec_col).first()[0])
     df = ensure_parallelism(df)
@@ -1195,7 +1073,7 @@ def embedding_cosine_pairs_lsh(
     # let-bind the signature: each band reference would otherwise
     # inline (and re-evaluate) the full n_planes-dot expression
     bb = _let(
-        _rhp_sig_auto(df, vec_col, planes, arrow),
+        _rhp_sig_auto(df, vec_col, planes),
         lambda s: F.array(
             *[
                 F.struct(
@@ -1240,7 +1118,6 @@ def containment_pairs(
     text_col: str,
     k: int = 3,
     threshold: float = 0.8,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Directed shingle-containment pairs (Broder 1997's second
     resemblance measure): c(A→B) = |S(A)∩S(B)| / |S(A)| — "how much of
@@ -1255,13 +1132,12 @@ def containment_pairs(
     distinct k-shingles, posting self-join on the shingle key with
     the same shuffle_hash gate — see that docstring for why the
     planner cannot be trusted through an explode — count common
-    shingles per pair), same ``max_shingle_df`` stop-shingle cap; the
-    only change is the final arithmetic: common is divided by each
-    side's OWN shingle count instead of the union, and both
-    directions are tested. One extra output row per mutually-
+    shingles per pair); the only change is the final arithmetic:
+    common is divided by each side's OWN shingle count instead of the
+    union, and both directions are tested. One extra output row per mutually-
     contained pair, no extra shuffle.
 
-    r14: above ``CONTAINMENT_PREFIX_MIN_BYTES`` the default path
+    r14: above the ``containment-prefix`` gate the default path
     DELEGATES to :func:`containment_pairs_prefix` — lossless, same
     output, and 2.3× faster once collision mass dominates (measured
     sf1: 49.3 → 21.6 s median, interleaved noop A/B). Containment has
@@ -1274,50 +1150,9 @@ def containment_pairs(
     count-from-join shape stays. Unknown source size takes the prefix
     path — same scale-safe default as the join hints.
     """
-    if max_shingle_df is None:
-        size = _source_bytes(df)
-        if size is None or size >= CONTAINMENT_PREFIX_MIN_BYTES:
-            return containment_pairs_prefix(df, id_col, text_col, k, threshold)
+    if gates.large("containment-prefix", df):
+        return containment_pairs_prefix(df, id_col, text_col, k, threshold)
     _hint = _self_join_hinter(df)
-    if max_shingle_df is not None:
-        # legacy stop-shingle path: sizes must count SURVIVING
-        # postings, so it keeps the aggregate-and-join shape
-        sh, sizes = _surviving_postings_and_sizes(
-            df, id_col, text_col, k, max_shingle_df
-        )
-        a, b = _hint(sh).alias("a"), _hint(sh).alias("b")
-        common = (
-            a.join(
-                b,
-                (F.col("a._sh") == F.col("b._sh"))
-                & (F.col("a._id") < F.col("b._id")),
-            )
-            .groupBy(
-                F.col("a._id").alias("_ia"), F.col("b._id").alias("_ib")
-            )
-            .agg(F.count(F.lit(1)).alias("_common"))
-        )
-        sa = _hint(sizes).select(
-            F.col("_id").alias("_ia"), F.col("_n").alias("_na")
-        )
-        sb = _hint(sizes).select(
-            F.col("_id").alias("_ib"), F.col("_n").alias("_nb")
-        )
-        scored = common.join(sa, "_ia").join(sb, "_ib")
-        fwd = scored.select(
-            F.col("_ia").alias("id_contained"),
-            F.col("_ib").alias("id_container"),
-            F.round(F.col("_common") / F.col("_na"), 6).alias("containment"),
-        )
-        rev = scored.select(
-            F.col("_ib").alias("id_contained"),
-            F.col("_ia").alias("id_container"),
-            F.round(F.col("_common") / F.col("_nb"), 6).alias("containment"),
-        )
-        return fwd.unionByName(rev).filter(
-            F.col("containment") >= threshold
-        )
-
     # r13: sizes carried on the posting rows exactly as in
     # ngram_jaccard_pairs (see that docstring) — the sizes
     # aggregate and both attach joins vanish. NO length filter
@@ -1432,8 +1267,7 @@ def containment_pairs_prefix(
     # sf10: straight heap OOM); sort-merge spills
     _mhint = _self_join_hinter(df, "merge")
     arrays = _hashed_shingles(df, id_col, text_col, k)
-    size = _source_bytes(df)
-    if size is None or size >= PLANNER_TRUST_MAX_BYTES:
+    if gates.large("planner-trust", df):
         # score-once at corpus scale (the global_quality_rank
         # pattern): FOUR branches consume the shingle arrays (df
         # postings, full postings, both verify sides) — uncheckpointed

@@ -18,32 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-#: Catalyst-estimated input bytes above which a dense-vector fan-out
-#: (dot of every row against a driver-side matrix) routes through the
-#: Arrow matmul kernel (functions.vectors.dot_many_pandas) instead of
-#: the interpreted Catalyst higher-order fold. The fold is
-#: CodegenFallback — k dots of dim d cost k·d interpreted lambda evals
-#: per row; measured crossover ≈10⁴ rows (~2.5 MB at 64-dim float32).
-#: 4 MB keeps sf0.01/sf0.1 oracle-parity paths on the exact
-#: sequential fold and switches the 10×-up regime.
-ARROW_FANOUT_MIN_BYTES = 4 << 20
-
-#: Catalyst-estimated input bytes below which widening is skipped
-#: entirely: the round-robin shuffle ``ensure_parallelism`` inserts is
-#: then the single most expensive stage of the query (~one extra AQE
-#: stage for <1 MB of rows whose downstream per-row CPU totals a few
-#: ms). At real scale the input has many splits and widening is a
-#: no-op anyway; this floor only short-circuits the toy regime.
-WIDEN_MIN_BYTES = 1 << 20
-
-
-def est_bytes(df: DataFrame) -> int:
-    """Catalyst's driver-side size estimate — metadata only, no job."""
-    return int(
-        str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    )
-
-
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition ``df`` up to ``min_partitions`` (default: the
     session's ``defaultParallelism``) iff it currently has fewer

@@ -6,8 +6,9 @@ Extension surface (SURVEY §2.11). Two tiers, same output contract
 - :func:`topk_similar` — brute-force cosine top-k. The probe set is
   small by definition (it is broadcast / driver-collected), so the
   corpus never shuffles. Two physical strategies by corpus size:
-  below ``ARROW_FANOUT_MIN_BYTES`` a broadcast-nested-loop join with
-  the JVM expression-fold dot (exact oracle parity, zero Python);
+  below the ``arrow-fanout`` gate (operators/gates.py) a
+  broadcast-nested-loop join with the JVM expression-fold dot (exact
+  oracle parity, zero Python);
   above it, ONE Arrow matmul per batch scores a corpus row against
   every probe at once (``functions.vectors.dot_many_pandas``) — the
   BNL disappears entirely and with it its pathology (BNL parallelism
@@ -32,31 +33,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from gaming_ai_analytics_spark.functions.vectors import dot, dot_many_pandas
+from gaming_ai_analytics_spark.operators import gates
 from gaming_ai_analytics_spark.operators.dedup import _hyperplanes
-from gaming_ai_analytics_spark.operators.parallelism import (
-    ARROW_FANOUT_MIN_BYTES,
-    ensure_parallelism,
-    est_bytes,
-)
+from gaming_ai_analytics_spark.operators.parallelism import ensure_parallelism
 
 
-#: Corpus size (Catalyst-estimated bytes) below which the two-level
-#: tournament is pure overhead: per-probe candidate spaces of a few
-#: hundred thousand rows sort fine in ONE window reducer each, and the
-#: extra ranking stage costs more than it saves (measured +35% on the
-#: sf0.1 bench). Above it, the tournament bounds reducer fan-in.
-TOURNAMENT_MIN_BYTES = 64 << 20
-
-# Arrow fan-out sizing shared with the dedup exact tier lives in
-# operators.parallelism (ARROW_FANOUT_MIN_BYTES / est_bytes).
+def _buckets(corpus: DataFrame) -> int:
+    """Tournament width for ranking candidates drawn from ``corpus``:
+    32 buckets above the ``tournament`` gate, else one plain window."""
+    return 32 if gates.large("tournament", corpus) else 1
 
 
-def _topk_per_probe(
-    scored: DataFrame,
-    k: int,
-    n_buckets: int | None = None,
-    size_hint: DataFrame | None = None,
-) -> DataFrame:
+def _topk_per_probe(scored: DataFrame, k: int, n_buckets: int) -> DataFrame:
     """Top-k over ``(probe_id, vec_id, cosine)``, tournament-staged.
 
     A single ``Window.partitionBy(probe_id)`` funnels the ENTIRE scored
@@ -67,27 +55,11 @@ def _topk_per_probe(
     trivially small set) into the global per-probe top-k. The union of
     per-bucket top-ks provably contains the global top-k, so results
     are identical to the naive window. Both levels stay codegen'd;
-    ``n_buckets`` scales with the cluster, not the data.
-
-    ``n_buckets=None`` auto-sizes from ``size_hint`` (the corpus-side
-    input, pre-join): Catalyst's driver-side size estimate — no job —
-    decides whether the candidate space justifies the second stage. A
-    simple scan's estimate is the file footprint, so the decision is
-    stable; a small corpus takes the single-window plan.
+    ``n_buckets`` scales with the cluster, not the data, and
+    ``n_buckets=1`` is the single-window plan (:func:`_buckets` picks
+    it for a small corpus, whose candidate space does not justify the
+    second stage).
     """
-    if n_buckets is None:
-        n_buckets = 32
-        if size_hint is not None:
-            est = int(
-                str(
-                    size_hint._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            )
-            if est < TOURNAMENT_MIN_BYTES:
-                n_buckets = 1
     pruned = scored.select("probe_id", "vec_id", "cosine")
     w2 = Window.partitionBy("probe_id").orderBy(
         F.col("cosine").desc(), F.col("vec_id")
@@ -122,7 +94,7 @@ def topk_similar(
     the plan (broadcast or collected — small by contract); ranking uses
     a unique (cosine desc, vec_id) order so results are deterministic.
 
-    Above ``ARROW_FANOUT_MIN_BYTES`` the corpus is scored via one
+    Above the ``arrow-fanout`` gate the corpus is scored via one
     Arrow matmul per batch (all probes at once) — map-only, no join;
     below it, a broadcast-nested-loop join keeps the exact sequential
     fold for last-ulp oracle parity. Either way the corpus side is
@@ -134,7 +106,7 @@ def topk_similar(
     p = probes.select(
         F.col(probe_id_col).alias("probe_id"), F.col(vec_col).alias("_pv")
     )
-    prows = p.collect() if est_bytes(c) >= ARROW_FANOUT_MIN_BYTES else None
+    prows = p.collect() if gates.large("arrow-fanout", c) else None
     if prows and cosine_band is None:
         # Arrow fan-out WITH in-kernel pruning (r13, guide §2.3
         # "aggregate before you shuffle"): the old shape scored every
@@ -237,7 +209,7 @@ def topk_similar(
         scored = scored.filter(
             (F.col("cosine") >= lo) & (F.col("cosine") < hi)
         )
-    return _topk_per_probe(scored, k, size_hint=c)
+    return _topk_per_probe(scored, k, _buckets(c))
 
 
 def topk_similar_lsh(
@@ -250,7 +222,6 @@ def topk_similar_lsh(
     n_planes: int = 16,
     bands: int = 4,
     dim: int | None = None,
-    arrow: bool | None = None,
     probe_rows: list | None = None,
 ) -> DataFrame:
     """ANN top-k: compare a probe only against corpus vectors sharing
@@ -259,8 +230,7 @@ def topk_similar_lsh(
     lower for speed.
 
     Pass ``dim`` so plan construction stays action-free (else a
-    one-row probe job runs); ``arrow`` picks the SRP signature kernel
-    (None = auto from size statistics).
+    one-row probe job runs).
 
     ``probe_rows`` — optional pre-collected probe rows
     ``[(probe_id, vector), ...]``. Supplying them (the same
@@ -279,12 +249,7 @@ def topk_similar_lsh(
     double-fold bit-for-bit)."""
     if dim is None:  # fallback only — callers should pass the dim
         dim = len(corpus.select(vec_col).first()[0])
-    from gaming_ai_analytics_spark.operators.parallelism import (
-        WIDEN_MIN_BYTES,
-        ensure_parallelism,
-    )
-
-    if est_bytes(corpus) >= WIDEN_MIN_BYTES:
+    if gates.large("widen", corpus):
         # below the threshold the signature work is trivial and the
         # widening shuffle is the single most expensive stage
         corpus = ensure_parallelism(corpus)
@@ -295,7 +260,7 @@ def topk_similar_lsh(
     if probe_rows is not None:
         return _topk_lsh_mapside(
             corpus, probe_rows, k, id_col, vec_col,
-            planes, bands, width, mask, arrow,
+            planes, bands, width, mask,
         )
 
     def chunked(df: DataFrame, ident: str) -> DataFrame:
@@ -303,7 +268,7 @@ def topk_similar_lsh(
 
         # let-bind: one signature evaluation per row, not one per band
         bb = _let(
-            _rhp_sig_auto(df, vec_col, planes, arrow),
+            _rhp_sig_auto(df, vec_col, planes),
             lambda s: F.array(
                 *[
                     F.struct(
@@ -339,7 +304,7 @@ def topk_similar_lsh(
         )
         .distinct()
     )
-    return _topk_per_probe(cand, k, size_hint=corpus)
+    return _topk_per_probe(cand, k, _buckets(corpus))
 
 
 def _topk_lsh_mapside(
@@ -352,7 +317,6 @@ def _topk_lsh_mapside(
     bands: int,
     width: int,
     mask: int,
-    arrow: bool | None,
 ) -> DataFrame:
     """Map-side LSH candidate generation against a literal probe set.
 
@@ -402,7 +366,7 @@ def _topk_lsh_mapside(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cv")
     )
     matched = _let(
-        _rhp_sig_auto(c, "_cv", planes, arrow),
+        _rhp_sig_auto(c, "_cv", planes),
         lambda s: F.filter(
             F.sequence(F.lit(0), F.lit(n_probes - 1)),
             lambda i: reduce(
@@ -425,7 +389,7 @@ def _topk_lsh_mapside(
             dot(F.col("_cv"), F.element_at(pvec_mat, F.col("_pi") + 1)), 6
         ).alias("cosine"),
     )
-    return _topk_per_probe(cand, k, size_hint=corpus)
+    return _topk_per_probe(cand, k, _buckets(corpus))
 
 
 def build_ivf_index(
@@ -660,7 +624,7 @@ def ivf_probe(
         (assigned["_cell"] == routed["_cell"])
         & (F.col("vec_id") != F.col("probe_id")),
     ).select("probe_id", "vec_id", sim.alias("cosine"))
-    return _topk_per_probe(cand, k, size_hint=assigned)
+    return _topk_per_probe(cand, k, _buckets(assigned))
 
 
 def semantic_dedup(
@@ -697,7 +661,7 @@ def semantic_dedup(
     SUBSET of the exact tier's droppable set by construction
     (soundness is structural; only recall depends on the clustering).
     The cell self-join is pinned ``shuffle_hash`` above
-    ``PLANNER_TRUST_MAX_BYTES``: the exploded assignment frame's
+    the ``planner-trust`` gate: the exploded assignment frame's
     Catalyst estimate is pre-explode and a mis-broadcast OOMs at scale
     (same gate as the minhash self-joins, operators/dedup.py).
     """
@@ -884,18 +848,15 @@ def pq_encode(
     books: np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool | None = None,
 ) -> DataFrame:
     """Encode a vector frame to ``(vec_id, _codes array<int>)`` —
     map-only, no shuffle. A serving table stores the codes instead of
     the raw vectors: m log₂(ksub)-bit codes per vector (m=8, ksub=16 →
     4 bytes) vs dim·4 raw bytes (64-dim float → 256 bytes), a 64×
-    scan-size reduction for the ADC stage at 100 TB. ``arrow`` picks
-    the encoder (None = auto from Catalyst size statistics, the
-    ``_rhp_sig_auto`` discipline — no job)."""
-    if arrow is None:
-        arrow = est_bytes(df) >= ARROW_FANOUT_MIN_BYTES
-    enc = _pq_codes_arrow if arrow else _pq_codes_expr
+    scan-size reduction for the ADC stage at 100 TB. The encoder is
+    the Arrow kernel above the ``arrow-fanout`` gate, else the
+    expression form."""
+    enc = _pq_codes_arrow if gates.large("arrow-fanout", df) else _pq_codes_expr
     return df.select(
         F.col(id_col).alias("vec_id"),
         enc(F.col(vec_col), books).alias("_codes"),
@@ -916,7 +877,6 @@ def topk_similar_pq(
     seed: int = 42,
     probe_rows: list | None = None,
     codebooks: np.ndarray | None = None,
-    arrow: bool | None = None,
 ) -> DataFrame:
     """PQ-ADC ANN top-k with exact re-ranking — the compression tier
     next to :func:`topk_similar_lsh` (pruning by collision) and
@@ -953,7 +913,7 @@ def topk_similar_pq(
             F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cv")
         ).filter(F.col("_cv").isNotNull())
     )
-    coded = pq_encode(c, codebooks, "vec_id", "_cv", arrow=arrow)
+    coded = pq_encode(c, codebooks, "vec_id", "_cv")
     return _pq_adc_refine(c, coded, codebooks, probe_rows, k, refine)
 
 
@@ -1014,9 +974,9 @@ def _pq_adc_refine(
         )
         .filter(F.col("vec_id") != F.col("probe_id"))
     )
-    cands = _topk_per_probe(
-        scored, k * refine, size_hint=coded
-    ).select("probe_id", "vec_id")
+    cands = _topk_per_probe(scored, k * refine, _buckets(coded)).select(
+        "probe_id", "vec_id"
+    )
     # exact re-rank: bounded candidate frame broadcasts onto the raw
     # corpus; probe vectors resolve through literal arrays (no join)
     pid_arr = long_array_lit(pids)

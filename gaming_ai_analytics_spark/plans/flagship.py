@@ -35,10 +35,10 @@ histogram maintained in JVM code — the same (value, count) compression
 the round-2 hand-rolled two-level plan built, minus that plan's extra
 shuffle stage and driver-side ``F.aggregate`` expression walk. The
 built-in is both the faster bench plan (0.76 s vs 1.02 s steady-state
-at sf0.1) and a correct 100 TB plan *for this column*. The two-level
-histogram variant remains below (``median_impl="histogram"``) for
-medians over high-cardinality columns, where ``percentile``'s counts
-map would grow with distinct values per group.
+at sf0.1) and a correct 100 TB plan *for this column*. A median over
+a high-cardinality column would need a two-level (value, count) plan
+instead, since ``percentile``'s counts map grows with distinct values
+per group.
 """
 
 from __future__ import annotations
@@ -46,29 +46,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gaming_ai_analytics_spark.operators import gates
 from gaming_ai_analytics_spark.operators.joins import star_join
-from gaming_ai_analytics_spark.operators.parallelism import est_bytes
 from gaming_ai_analytics_spark.sources.star import load_table
-
-#: Size gate for statically broadcasting the enriched-orders join side
-#: (r11 — the sf1 decomposition, BASELINE.md §3).  Catalyst estimates a
-#: JOIN OUTPUT's size as a row-width product that lands far above the
-#: real 2-column projection, so the static planner picks SortMergeJoin
-#: and AQE's later broadcast conversion still pays BOTH shuffle writes
-#: (measured 25% of the sf1 query: 1.90 s -> 1.42 s hinted, 6-pair
-#: interleaved A/B).  The enriched frame has exactly |orders| rows
-#: (left-outer over unique-keyed dims), so the honest estimate is the
-#: orders SCAN estimate (file-byte based) for the two surviving
-#: columns, times a measured parquet->HashedRelation expansion
-#: allowance (~8x: dictionary-compressed 2-col pages vs 16 B/entry
-#: long-keyed hash map + row payloads).  The gate broadcasts only while
-#: est * 8 clears the session's 64 MB broadcast threshold — sf1's 4 MB
-#: estimate passes; a 10x-up orders (41 MB est -> 330 MB in-memory)
-#: refuses and keeps the unhinted SMJ/AQE plan, which is the correct
-#: fact⋈fact shape at 100 TB.  Same runtime-size-gate pattern as
-#: operators/dedup.py:909 (exact-pair tier) — never a blind hint.
-_ENRICHED_BCAST_EXPANSION = 8
-
 
 def _joined_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -91,23 +71,17 @@ def _joined_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
             (region, nation.n_regionkey == region.r_regionkey),
         ],
     ).select("o_orderkey", "r_name")
-    # size-gated static broadcast — see _ENRICHED_BCAST_EXPANSION above
-    est = est_bytes(orders.select("o_orderkey", "o_custkey"))
-    if 0 < est * _ENRICHED_BCAST_EXPANSION <= 64 << 20:
+    # size-gated static broadcast: the enriched side has |orders| rows,
+    # so the orders scan of its two columns sizes it (operators/gates.py)
+    sizing = orders.select("o_orderkey", "o_custkey")
+    if not gates.large("flagship-broadcast", sizing):
         enriched = F.broadcast(enriched)
     return lineitem.join(
         enriched, lineitem.l_orderkey == enriched.o_orderkey, "left"
     ).filter(F.col("l_quantity").isNotNull())  # semantic_layer.sql:14
 
 
-def flagship_star_metrics(
-    spark: SparkSession, sf_dir: str, median_impl: str = "percentile"
-) -> DataFrame:
-    if median_impl == "histogram":
-        return _flagship_histogram_median(spark, sf_dir)
-    if median_impl == "bracket":
-        return _flagship_bracket_median(spark, sf_dir)
-
+def flagship_star_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = _joined_fact(spark, sf_dir)
     n = F.count(F.lit(1))
     return joined.groupBy("r_name").agg(
@@ -122,105 +96,6 @@ def flagship_star_metrics(
         # exact interpolated median (A4); bounded state for this
         # low-cardinality column — see module docstring
         F.round(F.expr("percentile(l_quantity, 0.5)"), 2).alias("median_qty"),
-    )
-
-
-def _flagship_bracket_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r6-VERDICT experiment variant: the median rides the two-scan
-    ``bracket_exact_percentile`` strategy with every other flagship
-    measure as a pass-1 companion.  Pass 1 = one joined scan computing
-    count/avg/pcts plus the sketch bracket; pass 2 = a second joined
-    scan reduced to the in-bracket slice.  The hypothesis under test
-    (BASELINE.md §3) is whether splitting the holistic median out of
-    the main aggregation shrinks the join share; the cost is a second
-    full fact scan + join."""
-    from gaming_ai_analytics_spark.operators.aggregates import (
-        bracket_exact_percentile,
-    )
-
-    joined = _joined_fact(spark, sf_dir)
-    n = F.count(F.lit(1))
-    out = bracket_exact_percentile(
-        joined,
-        ["r_name"],
-        "l_quantity",
-        "median_qty",
-        companion_aggs=[
-            n.alias("line_count"),
-            F.round(F.avg("l_extendedprice"), 2).alias("avg_price"),
-            F.round(
-                F.sum(F.when(F.col("l_discount") > 0.05, 1).otherwise(0)) / n,
-                4,
-            ).alias("high_discount_pct"),
-            F.round(
-                F.sum(F.when(F.col("l_discount") < 0.02, 1).otherwise(0)) / n,
-                4,
-            ).alias("low_discount_pct"),
-        ],
-    )
-    return out.select(
-        "r_name",
-        "line_count",
-        "avg_price",
-        "high_discount_pct",
-        "low_discount_pct",
-        "median_qty",
-    )
-
-
-def _flagship_histogram_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-level variant for HIGH-cardinality medians: level 1 groups
-    by (region, value) with a fully codegen'd HashAggregate, level 2
-    derives every measure from the compressed (value, count) rows and
-    walks the sorted histogram once for the exact interpolated median —
-    per-group state bounded by distinct values *surviving level 1's
-    compression*, never raw rows."""
-    joined = _joined_fact(spark, sf_dir)
-    inter = joined.groupBy("r_name", "l_quantity").agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        F.sum("l_extendedprice").alias("_sum_price"),
-        F.sum(F.when(F.col("l_discount") > 0.05, 1).otherwise(0)).alias("_hi"),
-        F.sum(F.when(F.col("l_discount") < 0.02, 1).otherwise(0)).alias("_lo"),
-    )
-    n = F.sum("_cnt")
-    agg = inter.groupBy("r_name").agg(
-        n.alias("line_count"),
-        F.round(F.sum("_sum_price") / n, 2).alias("avg_price"),
-        F.round(F.sum("_hi") / n, 4).alias("high_discount_pct"),
-        F.round(F.sum("_lo") / n, 4).alias("low_discount_pct"),
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col("l_quantity").alias("v"), F.col("_cnt").alias("c"))
-            )
-        ).alias("_hist"),
-    )
-    # rank pos = 1 + (n-1)·0.5; walk the sorted (v, c) pairs once,
-    # grabbing the values covering ranks floor(pos) and ceil(pos).
-    pos = F.lit(1.0) + (F.col("line_count") - 1) * 0.5
-    lo, hi = F.floor(pos), F.ceiling(pos)
-    zero = F.struct(
-        F.lit(0).cast("long").alias("cum"),
-        F.lit(None).cast("double").alias("vlo"),
-        F.lit(None).cast("double").alias("vhi"),
-    )
-
-    def step(acc, x):
-        cum = acc["cum"] + x["c"]
-        return F.struct(
-            cum.alias("cum"),
-            F.coalesce(acc["vlo"], F.when(cum >= lo, x["v"])).alias("vlo"),
-            F.coalesce(acc["vhi"], F.when(cum >= hi, x["v"])).alias("vhi"),
-        )
-
-    sel = F.aggregate(F.col("_hist"), zero, step)
-    median = F.round(sel["vlo"] + (sel["vhi"] - sel["vlo"]) * (pos - lo), 2)
-    return agg.select(
-        "r_name",
-        "line_count",
-        "avg_price",
-        "high_discount_pct",
-        "low_discount_pct",
-        median.alias("median_qty"),
     )
 
 

@@ -14,6 +14,11 @@ from gaming_ai_analytics_spark.session import get_spark  # noqa: E402
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
+#: A gate bound no Catalyst estimate reaches (Long.MaxValue included):
+#: ``monkeypatch.setitem(gates.THRESHOLDS, gate, ABOVE_ANY_ESTIMATE)``
+#: forces the gate's small side, a bound of 0 its large side.
+ABOVE_ANY_ESTIMATE = 1 << 63
+
 
 @pytest.fixture(scope="session")
 def spark():

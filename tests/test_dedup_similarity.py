@@ -1,8 +1,10 @@
 from __future__ import annotations
 
 import pytest
+from conftest import ABOVE_ANY_ESTIMATE
 from pyspark.sql import functions as F
 
+from gaming_ai_analytics_spark.operators import gates
 from gaming_ai_analytics_spark.operators.dedup import (
     embedding_cosine_pairs,
     embedding_cosine_pairs_lsh,
@@ -199,18 +201,11 @@ def test_multimodal_invariants_hold_for_empty_decoding_decoder(spark):
 
 
 def test_exact_cosine_pairs_refuses_corpus_scale(spark, monkeypatch):
-    """r6 (verdict soft spot #8b): above ARROW_EXACT_MAX_BYTES the
+    """r6 (verdict soft spot #8b): above the arrow-exact-max bound the
     exact tier must FAIL LOUDLY toward the LSH tier rather than fall
     through to the O(n²) theta self-join."""
-    import pytest
-
-    import gaming_ai_analytics_spark.operators.dedup as dedup_mod
-    from gaming_ai_analytics_spark.operators.dedup import (
-        embedding_cosine_pairs,
-    )
-
     emb = load_table(spark, SF, "embeddings")
-    monkeypatch.setattr(dedup_mod, "ARROW_EXACT_MAX_BYTES", 1)
+    monkeypatch.setitem(gates.THRESHOLDS, "arrow-exact-max", 1)
     with pytest.raises(ValueError, match="embedding_cosine_pairs_lsh"):
         embedding_cosine_pairs(emb, "vec_id", "embedding", 0.5)
 
@@ -222,16 +217,11 @@ def test_cosine_pairs_arrow_tier_matches_expression_tier(spark, monkeypatch):
     threshold) decision is applied JVM-side on both paths, so a
     boundary pair cannot split them. Also pinned at the 10× sweep
     scale once (r5: 91400 identical pairs, 111 s → 1.5 s)."""
-    import gaming_ai_analytics_spark.operators.parallelism as par
-    from gaming_ai_analytics_spark.operators.dedup import (
-        embedding_cosine_pairs,
-    )
-
     emb = load_table(spark, SF, "embeddings")
     expr_pairs = sorted(
         map(tuple, embedding_cosine_pairs(emb, "vec_id", "embedding", 0.5).collect())
     )
-    monkeypatch.setattr(par, "ARROW_FANOUT_MIN_BYTES", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "arrow-fanout", 0)
     arrow_pairs = sorted(
         map(tuple, embedding_cosine_pairs(emb, "vec_id", "embedding", 0.5).collect())
     )
@@ -248,7 +238,7 @@ def test_frame_sampling_only_video(spark):
     assert all(len(r.frame_bytes) <= 64 for r in rows)
 
 
-def test_rhp_arrow_kernel_matches_expression_form(spark, sf_dir):
+def test_rhp_arrow_kernel_matches_expression_form(spark, sf_dir, monkeypatch):
     """The Arrow matmul signature and the interpreted expression fold
     must bucket identically on the fixture (sign flips are possible
     only at |v·p| ≈ ulp, and exact-cosine verification absorbs them) —
@@ -270,18 +260,17 @@ def test_rhp_arrow_kernel_matches_expression_form(spark, sf_dir):
     )
     assert sigs.filter(F.col("s_expr") != F.col("s_arrow")).count() == 0
 
-    expr_pairs = {
-        (r.id_a, r.id_b)
-        for r in embedding_cosine_pairs_lsh(
-            emb, "vec_id", "embedding", threshold=0.5, dim=64, arrow=False
-        ).collect()
-    }
-    arrow_pairs = {
-        (r.id_a, r.id_b)
-        for r in embedding_cosine_pairs_lsh(
-            emb, "vec_id", "embedding", threshold=0.5, dim=64, arrow=True
-        ).collect()
-    }
+    def pairs(bound):
+        monkeypatch.setitem(gates.THRESHOLDS, "arrow-signature", bound)
+        return {
+            (r.id_a, r.id_b)
+            for r in embedding_cosine_pairs_lsh(
+                emb, "vec_id", "embedding", threshold=0.5, dim=64
+            ).collect()
+        }
+
+    expr_pairs = pairs(ABOVE_ANY_ESTIMATE)
+    arrow_pairs = pairs(0)
     assert expr_pairs == arrow_pairs
     assert arrow_pairs  # non-trivial
 
@@ -533,27 +522,25 @@ def test_embedding_lsh_subset_of_exact_two_sfs(spark):
 
 
 def test_self_join_hint_gate_paths_agree(spark, monkeypatch):
-    """The shuffle_hash-vs-planner gate (PLANNER_TRUST_MAX_BYTES) is a
+    """The shuffle_hash-vs-planner gate (planner-trust) is a
     physical-plan choice only: force BOTH paths on the same parquet
     corpus and require identical pair sets, and pin that the gate
     actually selects the intended path for each source class
-    (tiny parquet scan → planner; LocalRelation/unknown → hint)."""
-    from gaming_ai_analytics_spark.operators import dedup as D
-
+    (tiny parquet scan → planner; createDataFrame → hint)."""
     docs = load_table(spark, SF, "documents")
     # gate selection: sf0.01 parquet is far below the gate → planner
-    assert D._source_bytes(docs) < D.PLANNER_TRUST_MAX_BYTES
+    assert not gates.large("planner-trust", docs)
+    # Catalyst cannot size a createDataFrame frame: it estimates
+    # Long.MaxValue and so takes the large side of every gate
     local = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    sz = D._source_bytes(local)
-    assert sz is None or sz >= D.PLANNER_TRUST_MAX_BYTES  # unknown → hint
+    assert gates.estimate(local) == (1 << 63) - 1
+    assert all(gates.large(g, local) for g in gates.THRESHOLDS)
 
     planner = _pairs(minhash_lsh_pairs(docs, "doc_id", "text", 3, 0.5))
-    monkeypatch.setattr(D, "PLANNER_TRUST_MAX_BYTES", 0)  # force hint path
-    hinted = _pairs(minhash_lsh_pairs(docs, "doc_id", "text", 3, 0.5))
-    assert hinted == planner
-    hinted_j = _pairs(ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5))
-    monkeypatch.setattr(D, "PLANNER_TRUST_MAX_BYTES", 4 << 20)
-    assert hinted_j == _pairs(ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5))
+    planner_j = _pairs(ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5))
+    monkeypatch.setitem(gates.THRESHOLDS, "planner-trust", 0)  # hint path
+    assert _pairs(minhash_lsh_pairs(docs, "doc_id", "text", 3, 0.5)) == planner
+    assert _pairs(ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5)) == planner_j
 
 
 def test_incremental_lsh_matches_full_cross_pairs(spark, sf_dir, tmp_path):
@@ -861,7 +848,7 @@ def test_span_removal_interval_complement_edges(spark, ansi):
 
 
 def test_cross_corpus_minhash_hint_gate(spark, monkeypatch, sf_dir):
-    """Both PLANNER_TRUST gate paths of the fuzzy-decontamination
+    """Both planner-trust gate paths of the fuzzy-decontamination
     verify join must agree on values, and the forced-hint path must
     plan the train shingle-array join as a ShuffledHashJoin — at
     scale Catalyst's pre-explode size estimate statically broadcast
@@ -875,7 +862,7 @@ def test_cross_corpus_minhash_hint_gate(spark, monkeypatch, sf_dir):
     planner = sorted(map(tuple, D.cross_corpus_minhash(
         train, ev, "doc_id", "text", k=3, threshold=0.5
     ).collect()))
-    monkeypatch.setattr(D, "PLANNER_TRUST_MAX_BYTES", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "planner-trust", 0)
     hinted_df = D.cross_corpus_minhash(
         train, ev, "doc_id", "text", k=3, threshold=0.5
     )
@@ -911,7 +898,7 @@ def test_pq_codebooks_deterministic_and_shaped(spark):
         train_pq_codebooks(emb, dim=64, m=7)
 
 
-def test_pq_encode_codes_in_range_and_kernel_parity(spark):
+def test_pq_encode_codes_in_range_and_kernel_parity(spark, monkeypatch):
     """Both encoders emit m codes in [0, ksub); the Arrow kernel and
     the expression form agree (identical distance geometry — ties on
     the fixture's continuous data are measure-zero)."""
@@ -922,14 +909,15 @@ def test_pq_encode_codes_in_range_and_kernel_parity(spark):
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     books = train_pq_codebooks(emb, dim=64, m=8, ksub=16)
-    expr = {
-        r.vec_id: tuple(r._codes)
-        for r in pq_encode(emb, books, arrow=False).collect()
-    }
-    arrow = {
-        r.vec_id: tuple(r._codes)
-        for r in pq_encode(emb, books, arrow=True).collect()
-    }
+
+    def codes(bound):
+        monkeypatch.setitem(gates.THRESHOLDS, "arrow-fanout", bound)
+        return {
+            r.vec_id: tuple(r._codes) for r in pq_encode(emb, books).collect()
+        }
+
+    expr = codes(ABOVE_ANY_ESTIMATE)
+    arrow = codes(0)
     assert expr == arrow
     assert all(
         len(c) == 8 and all(0 <= x < 16 for x in c) for c in expr.values()
@@ -1088,14 +1076,12 @@ def test_topk_arrow_pruned_path_matches_bnl(spark, monkeypatch):
     is ever dropped, and rounding/ranking stay JVM-side on both paths.
     The self row (vec_id == probe_id) is excluded in-kernel and must
     not count toward the batch's k."""
-    import gaming_ai_analytics_spark.operators.similarity as sim
-
     emb = load_table(spark, SF, "embeddings")
     probes = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("probe_id"), "embedding"
     )
     bnl = sorted(map(tuple, topk_similar(emb, probes, k=5).collect()))
-    monkeypatch.setattr(sim, "ARROW_FANOUT_MIN_BYTES", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "arrow-fanout", 0)
     arrow = sorted(map(tuple, topk_similar(emb, probes, k=5).collect()))
     assert bnl == arrow
     assert len(bnl) == 5 * 5  # every probe returns k rows

@@ -56,16 +56,6 @@ def test_flagship_partial_aggregation(spark, sf_dir):
     assert "partial_percentile" in plan  # the median partial-aggregates too
 
 
-def test_flagship_histogram_variant_avoids_percentile(spark, sf_dir):
-    # the high-cardinality variant must not buffer values per group via
-    # Percentile: the heavy level-1 aggregation (region × quantity) is
-    # a codegen'd HashAggregate; ObjectHashAggregate (collect_list for
-    # the median histogram) only touches the compressed level-2 input.
-    plan = _plan(flagship_star_metrics(spark, sf_dir, median_impl="histogram"))
-    assert "partial_count" in plan and "partial_sum" in plan
-    assert "percentile" not in plan.lower()
-
-
 def test_scan_stays_in_codegen(spark, sf_dir):
     plan = _formatted(q_filter_numeric_conjunction(spark, sf_dir))
     assert "codegen id" in plan  # whole-stage codegen spans the filter
@@ -116,8 +106,8 @@ def test_topk_tournament_shape_when_forced(spark, sf_dir):
 
 
 def test_topk_auto_single_window_on_small_corpus(spark, sf_dir):
-    """Catalyst-size-stat adaptivity: a corpus far below
-    TOURNAMENT_MIN_BYTES takes ONE ranking window (the second stage is
+    """Catalyst-size-stat adaptivity: a corpus far below the
+    tournament gate takes ONE ranking window (the second stage is
     pure overhead at toy scale — measured +35% on the sf0.1 bench)."""
     from gaming_ai_analytics_spark.queries_llm import q_similarity_topk
 
@@ -674,12 +664,12 @@ def test_corpus_pair_overlap_merge_pinned_above_gate(
     from gaming_ai_analytics_spark import registry
 
     registry.queries()
-    from gaming_ai_analytics_spark.operators import dedup
+    from gaming_ai_analytics_spark.operators import gates
     from gaming_ai_analytics_spark.queries_traindata import (
         q_corpus_pair_overlap,
     )
 
-    monkeypatch.setattr(dedup, "PLANNER_TRUST_MAX_BYTES", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "planner-trust", 0)
     plan = _plan(q_corpus_pair_overlap(spark, sf_dir))
     smj_at = plan.find("SortMergeJoin")
     assert smj_at != -1, "self-join not merge-pinned above the gate"
@@ -725,31 +715,35 @@ def test_unimax_single_scan_compact_windows(spark, sf_dir):
     assert "Generate" not in plan, "explode entered the token count"
 
 
-def test_pq_plan_broadcasts_candidates_and_avoids_cartesian(spark, sf_dir):
+def test_pq_plan_broadcasts_candidates_and_avoids_cartesian(
+    spark, sf_dir, monkeypatch
+):
     """PQ ANN plan shape (r13): the refine join must BROADCAST the
     bounded candidate frame onto the raw corpus (never shuffle or
     nested-loop the corpus side), the ADC stage must carry no Python
     eval (codes + lookup tables are pure Catalyst expressions on the
     small-fixture path), and no CartesianProduct may appear anywhere —
     the probe fan-out is a literal-array explode, not a join."""
+    from conftest import ABOVE_ANY_ESTIMATE
+
+    from gaming_ai_analytics_spark.operators import gates
     from gaming_ai_analytics_spark.operators.similarity import (
         topk_similar_pq,
         train_pq_codebooks,
     )
     from gaming_ai_analytics_spark.sources.star import load_table
 
+    monkeypatch.setitem(gates.THRESHOLDS, "arrow-fanout", ABOVE_ANY_ESTIMATE)
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("probe_id"), "embedding"
     )
     books = train_pq_codebooks(emb, dim=64, m=8, ksub=16)
-    df = topk_similar_pq(
-        emb, probes, k=5, dim=64, codebooks=books, arrow=False
-    )
+    df = topk_similar_pq(emb, probes, k=5, dim=64, codebooks=books)
     plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BroadcastHashJoin" in plan  # candidates onto raw corpus
-    assert "PythonUDF" not in plan  # arrow=False path is pure Catalyst
+    assert "PythonUDF" not in plan  # small-side encoder is pure Catalyst
     # probe fan-out rides a literal explode, not a probe-table join
     assert plan.count("BroadcastHashJoin") == 1

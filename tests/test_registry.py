@@ -2,7 +2,9 @@
 
 Every registered query is checked against its DuckDB oracle at sf0.01,
 one pytest id per query, through the same ``__spark_entry__`` contract
-(and its ``_portable`` shim) that external callers use.
+(and its ``_portable`` shim) that external callers use. Each run also
+records the size gates the query consults, which must be the ones
+``test_gates.CONSULTS`` lists for it.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ import pytest
 import __spark_entry__
 from conftest import SF_ORACLE
 from gaming_ai_analytics_spark import registry
+from test_gates import gate_consults, unlisted_consults
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "tools"))
@@ -32,13 +35,16 @@ def duck():
 
 
 @pytest.mark.parametrize("name", list(_QUERIES))
-def test_query_matches_oracle(spark, duck, name):
+def test_query_matches_oracle(spark, duck, name, monkeypatch):
     """Rows, column names, Arrow type classes and values all match.
     A query registered without an oracle fails on the lookup."""
     oracle = __spark_entry__.oracle_sql()[name]
     out: list = []
+    seen = gate_consults(monkeypatch)
     sdf = _QUERIES[name](spark, SF_ORACLE)
     assert verify_local.compare(name, sdf, duck, oracle, out), out[-1][2]
+    unlisted = unlisted_consults(name, seen)
+    assert not unlisted, f"consults missing from test_gates.CONSULTS: {unlisted}"
 
 
 def test_every_registered_query_documented_in_coverage():

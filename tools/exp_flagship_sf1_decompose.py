@@ -14,12 +14,8 @@ decomposition at that scale.  This runs the prescribed experiment:
       join_count    joined fact -> count (join share, no agg battery)
       dims_count    enriched orders side -> count
       scan_count    bare 4-column fact scan -> count
-(c) interleaved plan arms (A/B/C):
-      A registered  built-in percentile riding the single agg
-      B histogram   two-level (region, value) codegen HashAggregate
-      C bracket     two-scan bracket rider (r7-refuted; re-confirm)
 
-Usage: python tools/exp_flagship_sf1_decompose.py [sf_dir] [pairs]
+Usage: python tools/exp_flagship_sf1_decompose.py [sf_dir]
 """
 
 from __future__ import annotations
@@ -56,7 +52,6 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
         REPO, ".benchdata", "sf1"
     )
-    pairs = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     spark = get_spark("exp-flagship-sf1")
 
     # ---- (a) final AQE plan for the fact join -----------------------
@@ -131,36 +126,6 @@ def main() -> None:
         ("scan_count", scan_count),
     ]:
         print(f"{name:12s} {timed(fn):.3f}s", flush=True)
-
-    # ---- (c) interleaved arms ---------------------------------------
-    impls = ("percentile", "histogram", "bracket")
-    ref = flagship_star_metrics(spark, sf_dir).orderBy("r_name").collect()
-    for impl in impls[1:]:
-        alt = (
-            flagship_star_metrics(spark, sf_dir, median_impl=impl)
-            .orderBy("r_name")
-            .collect()
-        )
-        assert [tuple(r) for r in ref] == [tuple(r) for r in alt], impl
-    print("\narms agree on", len(ref), "rows")
-
-    def run(impl: str) -> float:
-        t0 = time.perf_counter()
-        flagship_star_metrics(spark, sf_dir, median_impl=impl).toPandas()
-        return time.perf_counter() - t0
-
-    for impl in impls:
-        run(impl)  # warm every arm
-    res: dict[str, list[float]] = {i: [] for i in impls}
-    for i in range(pairs):
-        line = [f"pair {i}:"]
-        for impl in impls:
-            res[impl].append(run(impl))
-            line.append(f"{impl}={res[impl][-1]:.3f}s")
-        print(" ".join(line), flush=True)
-    print("\n=== arm medians ===")
-    for impl in impls:
-        print(f"{impl:10s} {statistics.median(res[impl]):.3f}s")
 
 
 if __name__ == "__main__":
