@@ -261,6 +261,31 @@ def punctuation_ratio(col: Column) -> Column:
     )
 
 
+def rule_gate(col: Column) -> tuple[list[Column], Column]:
+    """The C4/Gopher-style curation keep rule: token-count bounds,
+    mean-word-length band, punctuation ceiling, stopword floor.
+
+    Returns the four metrics as named columns (``n_tokens``,
+    ``mean_word_len``, ``punct_ratio``, ``stop_ratio``) and the keep
+    predicate over those names, so a caller selects the metrics, then
+    filters or projects on the predicate. The ratios are rounded to
+    4 dp after a +5e-10 nudge, which keeps both oracle engines on the
+    same side of an exact .00005 boundary (as in quality_score)."""
+    metrics = [
+        token_count(col).cast("int").alias("n_tokens"),
+        F.round(mean_word_length(col) + 5e-10, 4).alias("mean_word_len"),
+        F.round(punctuation_ratio(col) + 5e-10, 4).alias("punct_ratio"),
+        F.round(stopword_ratio(col) + 5e-10, 4).alias("stop_ratio"),
+    ]
+    keep = (
+        F.col("n_tokens").between(5, 100_000)
+        & F.col("mean_word_len").between(2.0, 12.0)
+        & (F.col("punct_ratio") < 0.3)
+        & (F.col("stop_ratio") > 0.01)
+    )
+    return metrics, keep
+
+
 def quality_score(col: Column) -> Column:
     """Composite document-quality heuristic in [0, 1]: favors texts of
     moderate length with low punctuation noise and a natural stopword

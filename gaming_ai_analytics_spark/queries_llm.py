@@ -158,13 +158,15 @@ def q_dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shingled and, bucketed on (band, bucket), never re-shuffled.
     The oracle recomputes the exact cross-split Jaccard pairs from
     scratch; banded-LSH recall is 1.0 at the fixtures' similarity gap
-    (same rationale as ``dedup_minhash_lsh``). Index tables are
-    managed-table writes (bucket metadata lives in the catalog) into
-    ONE process-lifetime ``artifacts.workdir`` per sf, overwritten per
-    invocation — repeated bench/verify runs reuse the slot instead of
-    leaking a full index per call (ADVICE r7); the per-sf slot keeps a
-    still-lazy result at one sf from reading an index a later
-    invocation at another sf overwrote."""
+    (same rationale as ``dedup_minhash_lsh``). The index is built at
+    most once per (session, sf_dir, documents fingerprint) under
+    ``artifacts.once`` and re-built only if its tables are gone: the
+    band and shingle tables are managed-table writes (bucket metadata
+    lives in the catalog, whose names are process-global, so they
+    carry the ``artifacts.token`` sf suffix) and the meta table lives
+    in ONE process-lifetime ``artifacts.workdir`` per sf — one index
+    per sf, not one per call (ADVICE r7), and an index at one sf
+    cannot overwrite another's."""
     from gaming_ai_analytics_spark.operators.dedup import (
         minhash_lsh_pairs_incremental,
         save_minhash_index,
@@ -175,17 +177,21 @@ def q_dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text").isNotNull()
     )
     store = TableStore(spark, artifacts.workdir(sf_dir, "lshidx"))
-    save_minhash_index(
-        store,
-        "idx",
-        "docsinc",
-        docs.filter(F.col("doc_id") % 10 != 0),
-        "doc_id",
-        "text",
-        num_buckets=8,
+    name = f"docsinc{artifacts.token(sf_dir)}"
+    artifacts.once(
+        spark, sf_dir, "lshidx",
+        lambda: save_minhash_index(
+            store, "idx", name, docs.filter(F.col("doc_id") % 10 != 0),
+            "doc_id", "text", num_buckets=8,
+        ),
+        sources=("documents",),
+        exists=lambda: store.exists("idx", f"{name}_lshmeta")
+        and spark.catalog.tableExists(
+            store.table_name("idx", f"{name}_lshbands")
+        ),
     )
     return minhash_lsh_pairs_incremental(
-        store, "idx", "docsinc", docs.filter(F.col("doc_id") % 10 == 0),
+        store, "idx", name, docs.filter(F.col("doc_id") % 10 == 0),
         "doc_id", "text",
     )
 

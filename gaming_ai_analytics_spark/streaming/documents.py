@@ -59,27 +59,13 @@ def curated_manifest(docs: DataFrame) -> DataFrame:
     ``events_streaming_dedupe_ttl`` path — the fixture schema carries
     no event time, and the registered bounded-snapshot run is exactly
     the nightly-backfill replay shape)."""
-    from gaming_ai_analytics_spark.functions.text import (
-        mean_word_length,
-        punctuation_ratio,
-        stopword_ratio,
-        token_count,
-    )
+    from gaming_ai_analytics_spark.functions.text import rule_gate
 
     t = F.col("text")
-    metrics = docs.filter(
-        t.isNotNull() & (F.length(F.trim(t)) > 0)
-    ).select(
-        F.md5(t).alias("fp"),
-        token_count(t).cast("int").alias("n_tokens"),
-        F.round(mean_word_length(t) + 5e-10, 4).alias("_mwl"),
-        F.round(punctuation_ratio(t) + 5e-10, 4).alias("_pr"),
-        F.round(stopword_ratio(t) + 5e-10, 4).alias("_sr"),
-    )
-    gated = metrics.filter(
-        F.col("n_tokens").between(5, 100_000)
-        & F.col("_mwl").between(2.0, 12.0)
-        & (F.col("_pr") < 0.3)
-        & (F.col("_sr") > 0.01)
+    metrics, keep = rule_gate(t)
+    gated = (
+        docs.filter(t.isNotNull() & (F.length(F.trim(t)) > 0))
+        .select(F.md5(t).alias("fp"), *metrics)
+        .filter(keep)
     )
     return gated.select("fp", "n_tokens").dropDuplicates(["fp"])
