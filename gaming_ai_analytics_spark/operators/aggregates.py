@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gaming_ai_analytics_spark.sources.local import local_frame
+
 
 def conditional_pct(cond: Column, ndigits: int = 4) -> Column:
     """A3 (semantic_layer.sql:83-90): share of rows satisfying ``cond``.
@@ -213,7 +215,7 @@ def exact_percentiles_scalable(
                 for side in ("lo", "hi")
             ]
         )
-        bdf = F.broadcast(spark.createDataFrame(b_rows, b_schema))
+        bdf = F.broadcast(local_frame(spark, b_rows, b_schema))
         slice_agg = (
             df.join(bdf, gcols)
             .groupBy(*gcols)
@@ -280,7 +282,7 @@ def exact_percentiles_scalable(
     # round ENGINE-side: Python's round() is banker's (52974.045 →
     # .04) while Spark/DuckDB ROUND is half-up (→ .05) — a knife-edge
     # parity bug if rounded driver-side
-    return spark.createDataFrame(rows, out_schema).select(
+    return local_frame(spark, rows, out_schema).select(
         *gcols, *[F.round(o, ndigits).alias(o) for o in out_names]
     )
 
@@ -421,8 +423,8 @@ def bracket_exact_percentile(
                 ]
             )
             bdf = F.broadcast(
-                spark.createDataFrame(
-                    [(*k, *brackets[k]) for k in todo], b_schema
+                local_frame(
+                    spark, [(*k, *brackets[k]) for k in todo], b_schema
                 )
             )
             cond = functools.reduce(
@@ -515,7 +517,7 @@ def bracket_exact_percentile(
         + [T.StructField(out_name, T.DoubleType())]
         + comp_fields
     )
-    return spark.createDataFrame(out_rows, out_schema).select(
+    return local_frame(spark, out_rows, out_schema).select(
         *gcols,
         F.round(out_name, ndigits).alias(out_name),
         *[f.name for f in comp_fields],

@@ -1,15 +1,13 @@
 """Deduplication operators — exact through approximate, at scale.
 
-Extension surface (SURVEY §2.11): the training-data-pipeline dedup
-ladder. No reference analog beyond the key-based anti-join
-(reviews_fact.py:151-153, covered in operators.joins); everything here
-is the standard large-corpus design expressed Spark-first:
+The training-data dedup ladder (SURVEY §2.11), each tier the standard
+large-corpus design expressed Spark-first:
 
 - exact: hash-groupBy on a normalized-text fingerprint (one shuffle).
-- n-gram Jaccard: inverted-index self-join on shingles — the exact
-  pairwise formulation; quadratic only within a shingle's posting
-  list.
-- MinHash + LSH: shingle→minhash signature→banding→bucket join —
+- n-gram Jaccard and containment: inverted-index self-join on shingle
+  keys, counting common shingles per pair — the exact pairwise
+  formulation; quadratic only within a shingle's posting list.
+- MinHash + LSH: shingle → minhash signature → banding → bucket join —
   candidate generation is linear-ish in corpus size; candidates are
   verified with exact Jaccard. The 100 TB path.
 - SimHash: 64-bit token-hash sign aggregation; near-dup = small
@@ -17,6 +15,15 @@ is the standard large-corpus design expressed Spark-first:
   bit ops), no Python.
 - embedding cosine: exact pairwise over id<id (oracle-checkable) and
   a random-hyperplane LSH bucketed variant (scale path).
+
+Every shingle tier keys a shingle by its 64-bit ``xxhash64``
+(:func:`hashed_shingles`): the posting lists of the count-from-join
+tiers, the verification arrays and the MinHash signatures all start
+from that one column. Exactness is therefore modulo a 64-bit
+collision. With U distinct shingles in a corpus, P(any two collide)
+≤ U²/2⁶⁵: ≈ 2·10⁻⁹ at the 260k shingles of a 5,000-doc corpus and
+≈ 3·10⁻⁴ at 10⁸. The DuckDB oracles, which compare shingle strings,
+stay the exactness check of every tier.
 
 All hash functions are ``xxhash64`` (JVM built-in, deterministic,
 seedable via a literal prefix column) — no Python ``hash()``
@@ -38,6 +45,7 @@ from gaming_ai_analytics_spark.functions.text import (
 from gaming_ai_analytics_spark.functions.vectors import dot
 from gaming_ai_analytics_spark.operators import gates
 from gaming_ai_analytics_spark.operators.parallelism import ensure_parallelism
+from gaming_ai_analytics_spark.sources.local import local_frame
 
 
 def _self_join_hinter(df: DataFrame, strategy: str = "shuffle_hash"):
@@ -82,6 +90,77 @@ def exact_dedup_canonical(
 # --------------------------------------------------------------------------
 # n-gram Jaccard (exact pairwise via inverted index)
 # --------------------------------------------------------------------------
+def hashed_shingles(col: Column, k: int) -> Column:
+    """The distinct k-word shingles of ``col`` as 64-bit ``xxhash64``
+    keys — the one shingle key of every tier in this module (posting
+    lists, verification arrays, MinHash signatures). Hashed AFTER
+    :func:`word_shingles`' ``array_distinct``, so the array's size is
+    the doc's distinct-shingle count; a posting keyed on 8 bytes
+    instead of the shingle string shrinks every join build and
+    exchange that carries it. Exactness is modulo a 64-bit collision:
+    with U distinct shingles, P(any collision) ≤ U²/2⁶⁵ (module
+    docstring)."""
+    return F.transform(word_shingles(col, k), lambda s: F.xxhash64(s))
+
+
+def _postings(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """``(_id, _n, _sh)`` posting rows of the count-from-join tiers:
+    one row per (doc, distinct shingle key), each carrying its doc's
+    shingle count ``_n``.
+
+    The corpus is widened by hash of the doc id, not round-robin: the
+    streamed side of a broadcast posting join then arrives clustered
+    on ``a._id``, which already satisfies the ``(id_a, id_b, …)``
+    pair-count aggregate — no exchange between join and aggregate.
+    Above the planner-trust gate the hinted posting join re-partitions
+    on the shingle key.
+
+    ``_n`` is computed from the array in the child Project
+    (CollapseProject keeps the multiply-referenced array alias
+    un-inlined). explode_OUTER, deliberately: plain explode lets
+    InferFiltersFromGenerate synthesize ``size(arr) > 0 AND
+    isnotnull(arr)`` with the whole shingle expression inlined twice
+    more and pushed below the widening exchange, tokenizing the corpus
+    three times per side, two of them in the single-task scan stage.
+    Outer explode blocks that inference; the no-shingle docs it keeps
+    emit one null ``_sh`` each, dropped by the join key's inferred
+    ``isnotnull`` above the Generate."""
+    base = ensure_parallelism(df, key=id_col).select(
+        F.col(id_col).alias("_id"),
+        hashed_shingles(F.col(text_col), k).alias("_arr"),
+    )
+    return base.select(
+        "_id", F.size("_arr").alias("_n"), F.explode_outer("_arr").alias("_sh")
+    )
+
+
+def _pair_counts(
+    df: DataFrame, id_col: str, text_col: str, k: int,
+    pair_ok: Column | None = None,
+) -> DataFrame:
+    """``(_ia, _ib, _na, _nb, _common)``: every doc pair ``_ia < _ib``
+    sharing at least one shingle, with its common-shingle count — the
+    posting self-join plus per-pair count both count-from-join tiers
+    score. ``pair_ok`` is an extra join predicate over the posting
+    sides ``a`` and ``b`` (the Jaccard tier's length filter)."""
+    _hint = _self_join_hinter(df)
+    sh = _postings(df, id_col, text_col, k)
+    a, b = _hint(sh).alias("a"), _hint(sh).alias("b")
+    cond = (F.col("a._sh") == F.col("b._sh")) & (F.col("a._id") < F.col("b._id"))
+    if pair_ok is not None:
+        cond = cond & pair_ok
+    return (
+        a.join(b, cond)
+        .groupBy(
+            F.col("a._id").alias("_ia"),
+            F.col("b._id").alias("_ib"),
+            F.col("a._n").alias("_na"),
+            F.col("b._n").alias("_nb"),
+        )
+        .agg(F.count(F.lit(1)).alias("_common"))
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -89,107 +168,60 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """All document pairs with shingle-Jaccard ≥ threshold.
+    """All document pairs with shingle-Jaccard ≥ threshold, as
+    ``(id_a, id_b, jaccard)`` with ``id_a < id_b``.
 
-    Inverted-index formulation: explode distinct k-shingles, self-join
-    postings (id_a < id_b), count common shingles per pair, then
-    |A∪B| = |A| + |B| − common. Exact — the oracle for the LSH variant.
+    Inverted-index formulation (:func:`_pair_counts`): explode each
+    doc's distinct shingle keys (:func:`hashed_shingles`, 64-bit) into
+    postings, self-join them on the key, count common shingles per
+    pair, then |A∪B| = |A| + |B| − common. Exact up to a 64-bit key
+    collision (module docstring) — the reference the LSH tier is
+    measured against, itself checked against the DuckDB oracle.
 
-    The posting self-join carries an explicit SHUFFLE_HASH hint above
-    the toy-corpus gate (``planner-trust``) — the one class
-    of places this library overrides the planner's join choice, found
-    the hard way by the r7 sf10 probe: Catalyst estimates the join
-    input from the PRE-explode scan/exchange bytes (explode fan-out
-    is invisible to stats, and AQE measures the stage BEFORE the
-    explode too), so at 6M docs it statically broadcast a ~3.3 GiB
-    exploded posting frame that fit "under 64 MB" on paper and OOMed
-    the JVM.  A posting list is corpus-sized by construction —
-    broadcasting it can never be right at scale; shingle-key
-    co-partitioning is the plan the inverted index wants, and
-    shuffle-hash beats sort-merge here (no sort of the fat exploded
-    frames; per-partition build state is corpus/shuffle-partitions
-    sized; AQE still splits skewed keys).  Measured A/B in
-    BASELINE.md §3: sf1 minhash 7.3→4.0 s; below the gate the
-    planner's broadcast genuinely wins (sf0.1 1.0 vs 1.8 s hinted),
-    which is why tiny sources are left alone.
+    Plan, by the ``planner-trust`` gate on the source estimate:
 
-    r13: the per-doc shingle count is
-    ``size(word_shingles(text,k))`` — the shingle array is already
-    distinct — so ``|A|``/``|B|`` ride each posting row map-side
-    instead of a separate corpus-sized ``groupBy(_id)`` aggregation
-    joined back onto the pair frame twice. That removes three
-    exchanges (the sizes aggregate plus two shuffles of the PAIR
-    stream keyed by id_a then id_b), and makes the exact
-    prefix/length filter available INSIDE the posting join:
-    ``jaccard ≤ min(|A|,|B|)/max(|A|,|B|)``, so any pair with
-    ``min < (t − 1e-6)·max`` can never survive the final
-    ``round(jac,6) ≥ t`` filter (round is monotone and HALF_UP:
-    ``jac ≤ min/max < t−1e-6 ⟹ round(jac,6) < t``) and is dropped
-    before the pair exchange — candidate pruning with zero recall
-    loss.
+    - below it the planner broadcasts one posting side; the corpus is
+      widened by hash of the doc id (:func:`_postings`), so the
+      streamed side already clusters the pair-count aggregate and no
+      exchange sits between join and aggregate;
+    - at or above it the posting join is pinned SHUFFLE_HASH.
+      Catalyst sizes the join input from the PRE-explode scan (explode
+      fan-out is invisible to its statistics, and AQE measures the
+      stage before the explode too), so at 6M docs it statically
+      broadcast a ~3.3 GiB exploded posting frame and OOMed the JVM.
+      Shingle-key co-partitioning is the plan an inverted index
+      wants; shuffle-hash beats sort-merge here (no sort of the
+      exploded frames; AQE still splits skewed keys).
 
-    r14, two measured-and-rejected rewrites (numbers in
-    OPTIMIZATION_r14.md): (1) identical-set collapse — group docs by
-    their exact shingle array, pair representatives, fan members back
-    out; byte-identical and sound, but every benchable corpus here is
-    deliberately duplicate-free (make_scaled_sf salts replica text
-    precisely so pair output does not grow K²), so it measured 0.76×
-    at sf1 (the group exchange and collect_list pay for nothing) and
-    was reverted — tools/exp_set_collapse_ab.py holds both arms.
-    (2) PPJoin prefix positions for this tier: with t = 0.5 a
-    hash-order prefix cuts the enumeration mass only ~2.1× (DuckDB
-    posting analysis) while forcing per-candidate array verification
-    of ~50× more pairs than the final answer — the count-from-join
-    formulation needs full postings on both sides, and this corpus's
-    saturated template vocabulary keeps lossless prefix candidates
-    within ~2× of all colliding pairs.
+    Each posting row carries its doc's shingle count, which makes the
+    exact length filter available inside the join: ``jaccard ≤
+    min(|A|,|B|)/max(|A|,|B|)``, so a pair with ``min < (t −
+    1e-6)·max`` can never pass the final ``round(jac, 6) ≥ t`` (round
+    is monotone and HALF_UP: ``jac ≤ min/max < t − 1e-6 ⟹
+    round(jac, 6) < t``) and is dropped before the aggregate, with
+    zero recall loss.
+
+    Measured and rejected on this tier (OPTIMIZATION_r14.md, ROADMAP
+    direction 4): identical-set collapse (0.76× at sf1 on this
+    duplicate-free corpus), PPJoin prefix positions (a hash-order
+    prefix cuts enumeration only ~2.1× at t = 0.5 while verifying
+    ~50× more candidates than the answer), and a ``mapInArrow``
+    partial (pair → count) kernel over shingle-partitioned postings
+    (2.16 s against 1.62 s on a 5,000-doc corpus).
     """
-    _hint = _self_join_hinter(df)
-    jac = F.col("_common") / (F.col("_na") + F.col("_nb") - F.col("_common"))
-
-    # sizes carried on the posting rows (array built once in
-    # the child Project — CollapseProject keeps multiply-referenced
-    # non-cheap aliases un-inlined, verified in plans/r13/).
-    # explode_OUTER, deliberately: plain explode lets
-    # InferFiltersFromGenerate synthesize `size(arr)>0 AND
-    # isnotnull(arr)` with the whole shingle expression re-inlined
-    # TWICE, and push it below the parallelize exchange — the corpus
-    # was tokenized 3× per side, two of them single-threaded in the
-    # scan stage (plans/r13/dedup_ngram_jaccard_*.txt). Outer explode
-    # blocks that inference; the no-shingle rows it keeps emit one
-    # null _sh each, dropped for free by the join key's inferred
-    # isnotnull above the Generate.
-    base = ensure_parallelism(df).select(
-        F.col(id_col).alias("_id"),
-        word_shingles(F.col(text_col), k).alias("_arr"),
-    )
-    sh = base.select(
-        "_id", F.size("_arr").alias("_n"), F.explode_outer("_arr").alias("_sh")
-    )
-    a, b = _hint(sh).alias("a"), _hint(sh).alias("b")
     length_ok = F.least(F.col("a._n"), F.col("b._n")) >= (
         F.lit(float(threshold) - 1e-6)
         * F.greatest(F.col("a._n"), F.col("b._n"))
     )
-    common = (
-        a.join(
-            b,
-            (F.col("a._sh") == F.col("b._sh"))
-            & (F.col("a._id") < F.col("b._id"))
-            & length_ok,
-        )
-        .groupBy(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a._n").alias("_na"),
-            F.col("b._n").alias("_nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("_common"))
-    )
+    jac = F.col("_common") / (F.col("_na") + F.col("_nb") - F.col("_common"))
     return (
-        common.withColumn("jaccard", F.round(jac, 6))
+        _pair_counts(df, id_col, text_col, k, length_ok)
+        .select(
+            F.col("_ia").alias("id_a"),
+            F.col("_ib").alias("id_b"),
+            F.round(jac, 6).alias("jaccard"),
+        )
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -256,17 +288,14 @@ def minhash_signatures(
     higher-order functions. Stays inside whole-stage codegen; at
     100 TB this is a map-only stage, vs the explode+groupBy
     formulation which shuffles one row per (doc, shingle). Each
-    shingle string is hashed to a long ONCE (inner let), so the
-    num_hashes-seed battery rehashes 8-byte longs instead of re-running
-    the string hash per seed — ~20% cheaper end-to-end. (A wrapping
-    h1+i·h2 affine family would halve the hash work again but ANSI
-    mode forbids overflowing long arithmetic, and try_add's
-    null-on-overflow corrupts the min.)"""
+    shingle string is hashed to a long ONCE (:func:`hashed_shingles`,
+    let-bound), so the num_hashes-seed battery rehashes 8-byte longs
+    instead of re-running the string hash per seed — ~20% cheaper
+    end-to-end. (A wrapping h1+i·h2 affine family would halve the hash
+    work again but ANSI mode forbids overflowing long arithmetic, and
+    try_add's null-on-overflow corrupts the min.)"""
     sig = _let(
-        _let(
-            word_shingles(F.col(text_col), k),
-            lambda shs: F.transform(shs, lambda s: F.xxhash64(s)),
-        ),
+        hashed_shingles(F.col(text_col), k),
         lambda hs: F.transform(
             F.sequence(F.lit(0), F.lit(num_hashes - 1)),
             lambda i: F.array_min(F.transform(hs, lambda h: F.xxhash64(i, h))),
@@ -308,21 +337,15 @@ def _band_entries(
 def _hashed_shingles(
     df: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
-    """(_id, _shs) distinct HASHED shingle arrays for exact-Jaccard
-    verification: set-Jaccard is preserved under an (effectively)
-    injective hash, while the pair join shuffles 8-byte longs instead
-    of raw shingle strings (~8× less payload) and
-    array_intersect/union compare longs, not strings — measured 2.3×
-    on the sf1 verify stage. array_distinct ONCE per doc (a doc
-    appears in many candidate pairs; deduping at the source shrinks
-    every joined payload and every per-pair set op)."""
+    """(_id, _shs) distinct HASHED shingle arrays
+    (:func:`hashed_shingles`) for exact verification: set-Jaccard is
+    preserved under an (effectively) injective hash, while the pair
+    join shuffles 8-byte longs instead of raw shingle strings (~8×
+    less payload) and array_intersect/union compare longs, not
+    strings — measured 2.3× on the sf1 verify stage."""
     return df.select(
         F.col(id_col).alias("_id"),
-        F.array_distinct(
-            F.transform(
-                word_shingles(F.col(text_col), k), lambda s: F.xxhash64(s)
-            )
-        ).alias("_shs"),
+        hashed_shingles(F.col(text_col), k).alias("_shs"),
     )
 
 
@@ -360,9 +383,19 @@ def _banded_candidates_with_arrays(
     AQE still splits skewed buckets. The verify joins carry HASHED
     shingles (see _hashed_shingles); per-doc arrays are corpus-sized
     too — same hint (the array payload makes a broadcast build map
-    even fatter than the row count suggests)."""
+    even fatter than the row count suggests).
+
+    The band entries are repartitioned on the join key ``(band,
+    bucket)`` (session shuffle partitions) before the self-join, so
+    both join sides read that ONE exchange and the 64-hash signatures
+    are computed once: below the gate the broadcast build side reuses
+    the streamed side's exchange instead of running its own signature
+    pass; above it the exchange is exactly the distribution the
+    hinted join requires, so it adds none."""
     df = ensure_parallelism(df)
-    band_entries = _band_entries(df, id_col, text_col, k, num_hashes, bands)
+    band_entries = _band_entries(
+        df, id_col, text_col, k, num_hashes, bands
+    ).repartition("band", "bucket")
     _hint = _self_join_hinter(df)
     a, b = _hint(band_entries).alias("a"), _hint(band_entries).alias("b")
     candidates = (
@@ -415,6 +448,24 @@ def minhash_lsh_pairs(
     )
 
 
+def _directed_containment(scored: DataFrame, threshold: float) -> DataFrame:
+    """``(id_contained, id_container, containment)`` rows ≥ threshold
+    from per-pair ``(_ia, _ib, _na, _nb, _common)`` counts: each pair
+    scored in both directions, common over the contained side's own
+    shingle count."""
+    fwd = scored.select(
+        F.col("_ia").alias("id_contained"),
+        F.col("_ib").alias("id_container"),
+        F.round(F.col("_common") / F.col("_na"), 6).alias("containment"),
+    )
+    rev = scored.select(
+        F.col("_ib").alias("id_contained"),
+        F.col("_ia").alias("id_container"),
+        F.round(F.col("_common") / F.col("_nb"), 6).alias("containment"),
+    )
+    return fwd.unionByName(rev).filter(F.col("containment") >= threshold)
+
+
 def minhash_containment_pairs(
     df: DataFrame,
     id_col: str,
@@ -454,17 +505,7 @@ def minhash_containment_pairs(
         F.size("_sa").alias("_na"),
         F.size("_sb").alias("_nb"),
     )
-    fwd = scored.select(
-        F.col("_ia").alias("id_contained"),
-        F.col("_ib").alias("id_container"),
-        F.round(F.col("_common") / F.col("_na"), 6).alias("containment"),
-    )
-    rev = scored.select(
-        F.col("_ib").alias("id_contained"),
-        F.col("_ia").alias("id_container"),
-        F.round(F.col("_common") / F.col("_nb"), 6).alias("containment"),
-    )
-    return fwd.unionByName(rev).filter(F.col("containment") >= threshold)
+    return _directed_containment(scored, threshold)
 
 
 # --------------------------------------------------------------------------
@@ -512,7 +553,8 @@ def save_minhash_index(
     store.save(
         layer,
         f"{name}_lshmeta",
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(k, num_hashes, bands, num_buckets)],
             "k int, num_hashes int, bands int, num_buckets int",
         ),
@@ -662,7 +704,7 @@ def stream_dedup_sink(
             store.save(
                 layer,
                 ledger,
-                spark.createDataFrame([(batch_id,)], "batch_id long"),
+                local_frame(spark, [(batch_id,)], "batch_id long"),
                 mode="append",
             )
         batch_df = batch_df.persist()
@@ -1128,16 +1170,19 @@ def containment_pairs(
     twice. Returns ``(id_contained, id_container, containment)`` with
     each qualifying direction emitted once.
 
-    Same inverted-index plan as :func:`ngram_jaccard_pairs` (explode
-    distinct k-shingles, posting self-join on the shingle key with
-    the same shuffle_hash gate — see that docstring for why the
-    planner cannot be trusted through an explode — count common
-    shingles per pair); the only change is the final arithmetic:
-    common is divided by each side's OWN shingle count instead of the
-    union, and both directions are tested. One extra output row per mutually-
-    contained pair, no extra shuffle.
+    Below the ``containment-prefix`` gate this is the count-from-join
+    plan of :func:`ngram_jaccard_pairs` through the same posting
+    builder (:func:`_pair_counts`): 64-bit shingle keys
+    (:func:`hashed_shingles`, exact up to the collision bound in the
+    module docstring, with the DuckDB oracle as the exactness check),
+    a doc-id-keyed widening so the broadcast posting join feeds the
+    pair-count aggregate without an exchange, and the same
+    shuffle_hash pin above the planner-trust gate. Only the final
+    arithmetic differs: common is divided by each side's OWN shingle
+    count instead of the union, and both directions are tested — one
+    extra output row per mutually-contained pair, no extra shuffle.
 
-    r14: above the ``containment-prefix`` gate the default path
+    Above the ``containment-prefix`` gate the default path
     DELEGATES to :func:`containment_pairs_prefix` — lossless, same
     output, and 2.3× faster once collision mass dominates (measured
     sf1: 49.3 → 21.6 s median, interleaved noop A/B). Containment has
@@ -1152,50 +1197,11 @@ def containment_pairs(
     """
     if gates.large("containment-prefix", df):
         return containment_pairs_prefix(df, id_col, text_col, k, threshold)
-    _hint = _self_join_hinter(df)
-    # r13: sizes carried on the posting rows exactly as in
-    # ngram_jaccard_pairs (see that docstring) — the sizes
-    # aggregate and both attach joins vanish. NO length filter
-    # here, deliberately: containment is asymmetric, and the
-    # smaller side's direction (common/n_small) can qualify at
-    # ANY size ratio, so no size-based prune is sound.
-    base = ensure_parallelism(df).select(
-        F.col(id_col).alias("_id"),
-        word_shingles(F.col(text_col), k).alias("_arr"),
-    )
-    sh = base.select(
-        "_id",
-        F.size("_arr").alias("_n"),
-        F.explode_outer("_arr").alias("_sh"),
-    )
-    a, b = _hint(sh).alias("a"), _hint(sh).alias("b")
-    scored = (
-        a.join(
-            b,
-            (F.col("a._sh") == F.col("b._sh"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .groupBy(
-            F.col("a._id").alias("_ia"),
-            F.col("b._id").alias("_ib"),
-            F.col("a._n").alias("_na"),
-            F.col("b._n").alias("_nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("_common"))
-    )
-    fwd = scored.select(
-        F.col("_ia").alias("id_contained"),
-        F.col("_ib").alias("id_container"),
-        F.round(F.col("_common") / F.col("_na"), 6).alias("containment"),
-    )
-    rev = scored.select(
-        F.col("_ib").alias("id_contained"),
-        F.col("_ia").alias("id_container"),
-        F.round(F.col("_common") / F.col("_nb"), 6).alias("containment"),
-    )
-    return fwd.unionByName(rev).filter(
-        F.col("containment") >= threshold
-    )
+    # NO length filter, deliberately: containment is asymmetric, and
+    # the smaller side's direction (common/n_small) can qualify at ANY
+    # size ratio, so no size-based prune is sound
+    scored = _pair_counts(df, id_col, text_col, k)
+    return _directed_containment(scored, threshold)
 
 
 def containment_pairs_prefix(
@@ -1370,17 +1376,7 @@ def containment_pairs_prefix(
             F.size("_sb").alias("_nb"),
         )
     )
-    fwd = scored.select(
-        F.col("_ia").alias("id_contained"),
-        F.col("_ib").alias("id_container"),
-        F.round(F.col("_common") / F.col("_na"), 6).alias("containment"),
-    )
-    rev = scored.select(
-        F.col("_ib").alias("id_contained"),
-        F.col("_ia").alias("id_container"),
-        F.round(F.col("_common") / F.col("_nb"), 6).alias("containment"),
-    )
-    return fwd.unionByName(rev).filter(F.col("containment") >= threshold)
+    return _directed_containment(scored, threshold)
 
 
 def cross_corpus_minhash(

@@ -12,10 +12,15 @@ above ``Long.MaxValue`` (small).
 The estimate is driver-side metadata — an optimizer pass, no job. For a
 parquet scan it is the (compressed) file bytes scaled through the plan;
 it cannot see the fan-out of an ``explode``. A frame Catalyst cannot size
-(``createDataFrame``, an RDD) estimates ``Long.MaxValue`` and so takes
-the large side of every gate: the scale-safe plan. That is also why
-unit tests on ``createDataFrame`` inputs exercise the large side while
-the sf0.01/sf0.1 parquet runs exercise the small side.
+— ``createDataFrame`` on a Python list, an RDD — estimates
+``Long.MaxValue`` and so takes the large side of every strategy gate:
+the scale-safe plan. That is also why unit tests on such inputs
+exercise the large side while the sf0.01/sf0.1 parquet runs exercise
+the small side. Arrow-built frames (``createDataFrame`` on a pandas
+frame or a ``pyarrow.Table``, so every driver-built result routed
+through ``sources.local.local_frame``) are ``LocalRelation``s and carry
+their real size. A refusal bound (:data:`REFUSALS`) raises on its large
+side instead of choosing a plan, so an unknown size never reaches it.
 """
 
 from __future__ import annotations
@@ -96,6 +101,13 @@ THRESHOLDS: dict[str, int] = {
 #: of every other gate starts at the bound.
 _ABOVE = frozenset({"arrow-signature", "flagship-broadcast"})
 
+#: Gates whose large side refuses the input rather than picking a plan:
+#: they take it only on a KNOWN size, never on Catalyst's unknown.
+REFUSALS = frozenset({"arrow-exact-max"})
+
+#: Catalyst's estimate of a frame it cannot size.
+UNKNOWN = (1 << 63) - 1
+
 
 def estimate(df: DataFrame) -> int:
     """Catalyst's size estimate (bytes) of ``df``'s optimized plan."""
@@ -106,4 +118,6 @@ def large(gate: str, df: DataFrame, per_row: int = 1) -> bool:
     """True when ``df`` takes ``gate``'s large side. ``per_row`` turns a
     bound counted in rows into bytes (the row-size lower bound)."""
     est, bound = estimate(df), THRESHOLDS[gate] * per_row
+    if gate in REFUSALS and est == UNKNOWN:
+        return False
     return est > bound if gate in _ABOVE else est >= bound

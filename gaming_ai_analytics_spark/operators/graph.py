@@ -28,13 +28,24 @@ long-chain graphs swap the sweep for the large-star/small-star
 alternating rounds of Kiveris et al., "Connected Components in
 MapReduce and Beyond" (SOCC'14) — same join+min building blocks,
 O(log n) rounds.
+
+The star scheme (the ``dedup_clusters`` default) first measures its
+edge list: a raw edge list of at most ``LOCAL_FINISH_MAX_EDGES`` pairs
+— every near-dup graph of the registered scales — is labeled by
+union-find on the driver and returned as an Arrow ``LocalRelation``,
+so no round barrier runs and executing the result runs no Spark task
+beyond a local scan. Only larger graphs run the round loop.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from gaming_ai_analytics_spark.sources.local import local_frame
 
 
 def connected_components(
@@ -99,16 +110,19 @@ def connected_components(
     )
 
 
-def _driver_union_find(
-    e: DataFrame, all_nodes: DataFrame
-) -> DataFrame:
-    """Small-graph finish: union-find over a COLLECTED edge list.
+#: Largest raw edge list :func:`connected_components_star` finishes on
+#: the driver instead of in star rounds: 10⁶ long id pairs are 16 MB of
+#: Arrow, and union-find over 10⁶ random edges takes ~2.7 s in CPython,
+#: while every star round costs two checkpoint jobs plus one action.
+LOCAL_FINISH_MAX_EDGES = 1_000_000
 
-    Only reachable through an explicit ``small_graph_max_edges`` cap —
-    the caller has declared the (already checkpointed, deduplicated)
-    edge relation a bounded driver merge, the same contract as the
-    Arrow exact tiers in ``operators/dedup.py``. Labels match the
-    distributed schemes exactly: component = min node id."""
+
+def _union_find(rows: Iterable[tuple]) -> list[tuple]:
+    """``(node, component)`` for every endpoint of the collected
+    ``(_s, _d)`` rows, component = min node id of its connected
+    component — the labels the distributed schemes produce. Unions
+    keep the smaller root, so each root IS its component's minimum;
+    self-loops and null endpoints only register the node."""
     parent: dict = {}
 
     def find(x):
@@ -119,29 +133,15 @@ def _driver_union_find(
             parent[x], x = r, parent[x]
         return r
 
-    nodes = [r["node"] for r in all_nodes.collect()]
-    for n in nodes:
-        parent[n] = n
-    for row in e.collect():
-        a, b = row["_s"], row["_d"]
+    for a, b in rows:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        if a is None or b is None:
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
-            parent[ra] = rb
-    comp_min: dict = {}
-    for n in nodes:
-        r = find(n)
-        if r not in comp_min or n < comp_min[r]:
-            comp_min[r] = n
-    spark = e.sparkSession
-    out_schema = T.StructType(
-        [
-            T.StructField("node", all_nodes.schema["node"].dataType),
-            T.StructField("component", all_nodes.schema["node"].dataType),
-        ]
-    )
-    return spark.createDataFrame(
-        [(n, comp_min[find(n)]) for n in nodes], out_schema
-    )
+            parent[max(ra, rb)] = min(ra, rb)
+    return [(n, find(n)) for n in parent]
 
 
 def connected_components_star(
@@ -149,13 +149,22 @@ def connected_components_star(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 40,
-    small_graph_max_edges: int = 0,
 ) -> DataFrame:
     """Connected components in O(log n) rounds — the alternating
     large-star/small-star scheme of Kiveris et al., "Connected
     Components in MapReduce and Beyond" (SOCC'14) — for graphs whose
     diameter makes per-hop hash-min sweeps (:func:`connected_components`)
     too many rounds (long chains; adversarial near-dup link farms).
+
+    The raw edge list is checkpointed once and probed with one bounded
+    collect. At or under :data:`LOCAL_FINISH_MAX_EDGES` raw edges the
+    collected list IS the graph: union-find labels it on the driver
+    and the result is an Arrow ``LocalRelation``
+    (:func:`~gaming_ai_analytics_spark.sources.local.local_frame`):
+    building the frame runs the upstream pair pipeline once, the
+    bounded collect riding its result stage, and executing it runs no
+    Python worker. Above the bound the log-round loop below runs, and
+    ``max_iter`` bounds only that loop.
 
     Each round is two join+min-aggregate steps over the flat edge
     list (the same building blocks and scale properties as hash-min —
@@ -170,26 +179,39 @@ def connected_components_star(
     The edge set converges to stars centered at each component's
     minimum id; output is ``(node, component)`` like hash-min (equality
     on arbitrary graphs — including self-loop-only nodes — is
-    test-pinned). Per round the driver pays two checkpoint
-    materializations (each star output — both are multiply referenced
-    downstream, so eager is the cheaper trade) and ONE action (an
-    aggregate returning the new edge count + total): convergence is
-    ``nxt ⊆ e ∧ |nxt| = |e| ⟺ nxt = e``, with the membership flag
-    folded into the materialized frame by a join against the previous
-    round's set — no separate count/except probes. Rounds are O(log n)
-    regardless of diameter — a 200-link chain converges in ~6 rounds
-    where hash-min needs 200 sweeps, and even on the short-diameter
-    sf1 near-dup graph the fewer rounds win outright (24.9 s vs
-    hash-min's 46.5 s before this change; the folded convergence
-    check cuts per-round driver jobs 5 → 2 on top).
+    test-pinned for both finishes). Per round the driver pays two
+    checkpoint materializations (each star output — both are multiply
+    referenced downstream, so eager is the cheaper trade) and ONE
+    action (an aggregate returning the new edge count + total):
+    convergence is ``nxt ⊆ e ∧ |nxt| = |e| ⟺ nxt = e``, with the
+    membership flag folded into the materialized frame by a join
+    against the previous round's set — no separate count/except
+    probes. Rounds are O(log n) regardless of diameter — a 200-link
+    chain converges in ~6 rounds where hash-min needs 200 sweeps.
     """
-    # checkpoint the RAW edge list first: both the filtered working
-    # set and the node universe derive from it, and without the
-    # checkpoint each derivation re-runs the entire upstream pair
-    # pipeline (a full MinHash pass when called from dedup_clusters)
+    # checkpoint the RAW edge list first: the bounded collect, the
+    # filtered working set and the node universe all derive from it,
+    # and without the checkpoint each derivation re-runs the entire
+    # upstream pair pipeline (a full MinHash pass when called from
+    # dedup_clusters). Lazy: the collect's one job materializes it;
+    # an eager checkpoint would be a second job over the same stage
     raw = edges.select(
         F.col(src).alias("_s"), F.col(dst).alias("_d")
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
+    probe = raw.limit(LOCAL_FINISH_MAX_EDGES + 1).toArrow()
+    if probe.num_rows <= LOCAL_FINISH_MAX_EDGES:
+        rows = zip(probe.column(0).to_pylist(), probe.column(1).to_pylist())
+        node_type = raw.select("_s").union(raw.select("_d")).schema[0].dataType
+        return local_frame(
+            raw.sparkSession,
+            _union_find(rows),
+            T.StructType(
+                [
+                    T.StructField("node", node_type),
+                    T.StructField("component", node_type),
+                ]
+            ),
+        )
     e = (
         raw.where(F.col("_s") != F.col("_d"))
         .distinct()
@@ -229,13 +251,6 @@ def connected_components_star(
         return out.where(F.col("_s") != F.col("_d")).distinct()
 
     n_edges = e.count()
-    if small_graph_max_edges and n_edges <= small_graph_max_edges:
-        # opt-in hybrid finish: the caller declared this edge volume a
-        # bounded driver merge — skip the iteration barriers entirely
-        # (each star round costs two checkpoint jobs + one action; at
-        # toy scale those barriers ARE the runtime). At corpus scale
-        # the cap simply never matches and the log-round loop runs.
-        return _driver_union_find(e, all_nodes)
     for _ in range(max_iter):
         # eager: the large-star frame feeds small-star FOUR times (two
         # union branches × aggregate + join); a lazy checkpoint would
@@ -286,10 +301,12 @@ def dedup_clusters(
     min doc id of the connected component; the canonical survivor of
     each cluster is the row where ``doc_id == cluster_id``.
 
-    ``algorithm``: ``star`` (default — O(log n) rounds, measured 1.9×
-    faster than hash-min on the sf1 near-dup graph and
+    ``algorithm``: ``star`` (default — a driver union-find finish for
+    edge lists up to ``LOCAL_FINISH_MAX_EDGES``, else O(log n) rounds,
+    measured 1.9× faster than hash-min on the sf1 near-dup graph and
     diameter-independent) or ``hashmin`` (one hop per sweep; fine for
-    short-diameter blobs, simplest plan per round)."""
+    short-diameter blobs, simplest plan per round). ``max_iter`` bounds
+    the round loop of either."""
     if algorithm == "star":
         cc, default_cap = connected_components_star, 40
     elif algorithm == "hashmin":

@@ -11,6 +11,11 @@ profiling) pins the whole job to a single core while 31 idle.
 parallelism. It is gated on the *actual* scan partition count, so at
 real scale — where a 100 TB table already yields ~10⁵ splits — it is a
 no-op and adds no shuffle.
+
+Widening by a ``key`` column hash-partitions on it instead of
+round-robin: a downstream aggregate or join keyed on that column (a
+doc id feeding a per-pair count) then finds its input already
+clustered and plans no exchange of its own.
 """
 
 from __future__ import annotations
@@ -18,14 +23,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(
+    df: DataFrame, min_partitions: int | None = None, key: str | None = None
+) -> DataFrame:
     """Repartition ``df`` up to ``min_partitions`` (default: the
     session's ``defaultParallelism``) iff it currently has fewer
-    partitions. The round-robin shuffle of the raw rows is negligible
-    next to the CPU-bound work this guards; when the input is already
-    wide enough the DataFrame is returned unchanged."""
+    partitions — by hash of ``key`` when given, else round-robin. The
+    shuffle of the raw rows is negligible next to the CPU-bound work
+    this guards; when the input is already wide enough the DataFrame
+    is returned unchanged."""
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
+        return df.repartition(target, key) if key else df.repartition(target)
     return df

@@ -36,6 +36,7 @@ from gaming_ai_analytics_spark.functions.vectors import dot, dot_many_pandas
 from gaming_ai_analytics_spark.operators import gates
 from gaming_ai_analytics_spark.operators.dedup import _hyperplanes
 from gaming_ai_analytics_spark.operators.parallelism import ensure_parallelism
+from gaming_ai_analytics_spark.sources.local import local_frame
 
 
 def _buckets(corpus: DataFrame) -> int:
@@ -445,11 +446,12 @@ def save_ivf_index(store, layer: str, name: str, assigned: DataFrame,
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
     store.save(
         layer, f"{name}_centroids",
-        spark.createDataFrame(rows, ["cell", "centroid"]),
+        local_frame(spark, rows, "cell long, centroid array<double>"),
     )
     store.save(
         layer, f"{name}_ivfmeta",
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(centroids.shape[0]), int(centroids.shape[1]),
               int(seed), int(num_buckets))],
             "n_clusters int, dim int, seed int, num_buckets int",
@@ -1028,12 +1030,13 @@ def save_pq_index(
     store.save(
         layer,
         f"{name}_codebooks",
-        spark.createDataFrame(rows, ["j", "c", "centroid"]),
+        local_frame(spark, rows, "j long, c long, centroid array<double>"),
     )
     store.save(
         layer,
         f"{name}_pqmeta",
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(m), int(ksub), int(dsub), int(seed))],
             "m int, ksub int, dsub int, seed int",
         ),

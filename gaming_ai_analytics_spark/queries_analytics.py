@@ -362,25 +362,13 @@ def q_dedup_cluster_assign_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``connected_components_star``) — the long-diameter scale path
     beside hash-min; identical labels, same recursive-CTE oracle.
 
-    Opts into the hybrid small-graph finish (r6): once the
-    checkpointed near-dup edge list measures ≤1M edges it is a
-    bounded driver merge (≤16 MB of id pairs), and union-find there
-    replaces 4-6 star rounds whose checkpoint barriers dominate at
-    that volume. Measured sf0.1 3.4 → 2.3 s — the residual is the
-    n-gram pair pipeline itself, which also dominates sf1 (~22 s
-    total, CC share now negligible). A real corpus's edge list blows
-    past the cap and runs the log-round loop unchanged."""
-    from gaming_ai_analytics_spark.operators.graph import (
-        connected_components_star,
-    )
-
+    A near-dup edge list at or under ``LOCAL_FINISH_MAX_EDGES`` (every
+    registered scale) takes the scheme's driver union-find finish
+    instead of star rounds; a real corpus's edge list runs the
+    log-round loop."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.5)
-    return connected_components_star(
-        pairs, "id_a", "id_b", small_graph_max_edges=1_000_000
-    ).select(
-        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
-    )
+    return dedup_clusters(pairs, "id_a", "id_b")
 
 
 register(

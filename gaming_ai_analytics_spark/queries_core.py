@@ -32,6 +32,7 @@ from gaming_ai_analytics_spark.operators.joins import (
     star_join,
 )
 from gaming_ai_analytics_spark.registry import register
+from gaming_ai_analytics_spark.sources.local import local_frame
 from gaming_ai_analytics_spark.sources.star import load_table
 
 
@@ -1221,7 +1222,8 @@ def q_agg_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already folded to literals (ADVICE r11).
     cut_rows = cuts.collect()  # bounded: |groups| rows, 2 doubles each
     if not cut_rows:  # empty/filtered-out input: coalesce(*[]) raises
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "l_returnflag string, n_rows long, mean_raw double,"
             " mean_winsorized double, mean_trimmed double,"

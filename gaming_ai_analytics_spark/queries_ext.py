@@ -33,6 +33,7 @@ from gaming_ai_analytics_spark.plans.metric_view import (
 )
 from gaming_ai_analytics_spark.plans.pipeline import fact_transform
 from gaming_ai_analytics_spark.registry import register
+from gaming_ai_analytics_spark.sources.local import local_frame
 from gaming_ai_analytics_spark.sources.star import load_table
 
 # SQL twin of functions.scoring.SENTIMENT_LEXICON substring-count
@@ -919,7 +920,8 @@ def q_dq_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline); obs.get blocks until the action's job finishes
     observed.count()
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(m["n_rows"]),

@@ -34,6 +34,7 @@ from gaming_ai_analytics_spark.functions.text_sql import NORM as _NORM
 from gaming_ai_analytics_spark.operators.dedup import cross_corpus_overlap
 from gaming_ai_analytics_spark.operators.parallelism import ensure_parallelism
 from gaming_ai_analytics_spark.registry import register
+from gaming_ai_analytics_spark.sources.local import local_frame
 from gaming_ai_analytics_spark.sources.star import (
     load_nonempty_documents,
     load_table,
@@ -2191,7 +2192,8 @@ def q_bpe_merge_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships: (merge_round, lhs, rhs, merged, pair_count), pair counts
     measured on the segmentation BEFORE that round's merge."""
     merges = bpe_train(_word_counts(spark, sf_dir), BPE_ROUNDS)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges,
         "merge_round int, lhs string, rhs string,"
         " merged string, pair_count long",
@@ -2544,8 +2546,8 @@ def q_quality_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             offset_rows.append((src, b, acc, n_src))
             acc += by_bkt[b]
     offsets = F.broadcast(
-        spark.createDataFrame(
-            offset_rows, "source string, _bkt int, _off long, _n_src long"
+        local_frame(
+            spark, offset_rows, "source string, _bkt int, _off long, _n_src long"
         )
     )
     w_in = Window.partitionBy("source", "_bkt").orderBy("quality", "doc_id")

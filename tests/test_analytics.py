@@ -652,9 +652,21 @@ def test_user_lifetime_value_planted_profile(spark):
     assert r.span_days == 10 and r.events_per_active_day == 1.5
 
 
-def test_star_cc_matches_hashmin_on_random_graphs(spark):
+def _star_finishes(monkeypatch):
+    """Yield once per finish of ``connected_components_star``: the
+    default driver union-find, then the log-round loop forced by a
+    local-finish bound of 0."""
+    from gaming_ai_analytics_spark.operators import graph
+
+    yield "local"
+    monkeypatch.setattr(graph, "LOCAL_FINISH_MAX_EDGES", 0)
+    yield "loop"
+
+
+def test_star_cc_matches_hashmin_on_random_graphs(spark, monkeypatch):
     """large-star/small-star must produce exactly hash-min's labels on
-    arbitrary graphs (random edge sets, multiple components, hubs)."""
+    arbitrary graphs (random edge sets, multiple components, hubs) —
+    through the local finish and through the forced round loop."""
     import random
 
     from gaming_ai_analytics_spark.operators.graph import (
@@ -662,28 +674,37 @@ def test_star_cc_matches_hashmin_on_random_graphs(spark):
     )
 
     rng = random.Random(7)
-    for trial in range(3):
+    graphs = []
+    for _ in range(3):
         edges = [
             (rng.randrange(40), rng.randrange(40)) for _ in range(30)
         ]
-        edges = [(a, b) for a, b in edges if a != b]
-        df = spark.createDataFrame(edges, ["id_a", "id_b"])
-        ref = {
-            r.node: r.component for r in connected_components(df).collect()
-        }
-        got = {
+        graphs.append([(a, b) for a, b in edges if a != b])
+    refs = [
+        {
             r.node: r.component
-            for r in connected_components_star(df).collect()
+            for r in connected_components(
+                spark.createDataFrame(g, ["id_a", "id_b"])
+            ).collect()
         }
-        assert got == ref, f"trial {trial}"
+        for g in graphs
+    ]
+    for finish in _star_finishes(monkeypatch):
+        for trial, (g, ref) in enumerate(zip(graphs, refs)):
+            df = spark.createDataFrame(g, ["id_a", "id_b"])
+            got = {
+                r.node: r.component
+                for r in connected_components_star(df).collect()
+            }
+            assert got == ref, f"{finish} trial {trial}"
 
 
-def test_star_cc_labels_self_loop_only_nodes(spark):
+def test_star_cc_labels_self_loop_only_nodes(spark, monkeypatch):
     """A node whose only edge is a self-loop is a singleton component.
     hash-min labels it (the self-edge survives into its node list);
-    the star scheme filters self-loops out of the edge set, so its
+    the star loop filters self-loops out of the edge set, so its
     node list must come from the UNFILTERED input or the node
-    silently vanishes from the labeling."""
+    silently vanishes from the labeling — in both finishes."""
     from gaming_ai_analytics_spark.operators.graph import (
         connected_components_star,
     )
@@ -692,18 +713,22 @@ def test_star_cc_labels_self_loop_only_nodes(spark):
         [(1, 2), (7, 7), (3, 3), (3, 4)], ["id_a", "id_b"]
     )
     ref = {r.node: r.component for r in connected_components(df).collect()}
-    got = {
-        r.node: r.component for r in connected_components_star(df).collect()
-    }
-    assert got == ref == {1: 1, 2: 1, 3: 3, 4: 3, 7: 7}
+    assert ref == {1: 1, 2: 1, 3: 3, 4: 3, 7: 7}
+    for finish in _star_finishes(monkeypatch):
+        got = {
+            r.node: r.component
+            for r in connected_components_star(df).collect()
+        }
+        assert got == ref, finish
 
 
-def test_star_cc_small_graph_tier_parity_and_opt_in(spark):
-    """The hybrid driver union-find finish (r6) is OPT-IN and label-
-    identical: with the cap set, a ≤cap graph skips the star rounds
-    but yields exactly the distributed labels — including self-loop
-    singletons; with the default cap of 0 the loop always runs (the
-    max_iter=0 'must already be converged' contract stays intact)."""
+def test_star_cc_local_finish_matches_forced_loop(spark, monkeypatch):
+    """The driver union-find finish (the default for every raw edge
+    list at or under LOCAL_FINISH_MAX_EDGES) is label-identical to the
+    star round loop, self-loop singletons included, and returns an
+    Arrow LocalRelation with the edge id type. ``max_iter`` bounds only
+    the loop: a graph it cannot converge raises once the loop is
+    forced."""
     import pytest as _pytest
 
     from gaming_ai_analytics_spark.operators.graph import (
@@ -713,56 +738,80 @@ def test_star_cc_small_graph_tier_parity_and_opt_in(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (9, 9)], ["id_a", "id_b"]
     )
-    ref = sorted(map(tuple, connected_components_star(edges).collect()))
-    fast = sorted(
-        map(
-            tuple,
-            connected_components_star(
-                edges, small_graph_max_edges=1000
-            ).collect(),
-        )
+    local_df = connected_components_star(edges, max_iter=0)
+    assert "LocalRelation" in str(
+        local_df._jdf.queryExecution().optimizedPlan()
     )
-    assert fast == ref
-    assert dict(fast) == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 9: 9}
-    # opt-in only: default keeps the iterative contract
+    assert local_df.schema["node"].dataType == edges.schema["id_a"].dataType
+    local = sorted(map(tuple, local_df.collect()))
+    assert dict(local) == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 9: 9}
+    from gaming_ai_analytics_spark.operators import graph
+
+    monkeypatch.setattr(graph, "LOCAL_FINISH_MAX_EDGES", 0)
+    loop = sorted(map(tuple, connected_components_star(edges).collect()))
+    assert loop == local
     with _pytest.raises(RuntimeError):
         connected_components_star(edges, max_iter=0)
-    # and the cap does not bypass max_iter when the graph EXCEEDS it
-    with _pytest.raises(RuntimeError):
-        connected_components_star(
-            edges, max_iter=0, small_graph_max_edges=1
-        )
 
 
-def test_dedup_clusters_explicit_zero_cap_raises(spark):
+def test_dedup_clusters_explicit_zero_cap_raises(spark, monkeypatch):
     """max_iter=0 is a 'must already be converged' probe, not a
-    request for the default cap — on a non-trivial graph it raises."""
+    request for the default cap — on a non-trivial graph it raises.
+    The star case forces its round loop: ``max_iter`` bounds only the
+    loop, and the local finish would label this graph without one."""
     import pytest as _pytest
 
+    from gaming_ai_analytics_spark.operators import graph
+
+    monkeypatch.setattr(graph, "LOCAL_FINISH_MAX_EDGES", 0)
     pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
     for algo in ("star", "hashmin"):
         with _pytest.raises(RuntimeError):
             dedup_clusters(pairs, max_iter=0, algorithm=algo).collect()
 
 
-def test_star_cc_long_chain_logarithmic_rounds(spark):
+def test_star_cc_long_chain_logarithmic_rounds(spark, monkeypatch):
     """A 120-link chain: hash-min needs diameter sweeps (raises at a
-    low cap); star converges in O(log n) rounds under the same cap."""
+    low cap); the forced star loop converges in O(log n) rounds under
+    the same cap."""
     import pytest as _pytest
 
-    from gaming_ai_analytics_spark.operators.graph import (
-        connected_components_star,
-    )
+    from gaming_ai_analytics_spark.operators import graph
 
     chain = [(i, i + 1) for i in range(120)]
     df = spark.createDataFrame(chain, ["id_a", "id_b"])
     with _pytest.raises(RuntimeError):
         connected_components(df, max_iter=10)
+    monkeypatch.setattr(graph, "LOCAL_FINISH_MAX_EDGES", 0)
     out = {
         r.node: r.component
-        for r in connected_components_star(df, max_iter=10).collect()
+        for r in graph.connected_components_star(df, max_iter=10).collect()
     }
     assert out == {i: 0 for i in range(121)}
+
+
+def test_star_cc_second_construction_runs_three_jobs(spark):
+    """Building ``dedup_cluster_assign_star`` runs the near-dup pair
+    pipeline once and finishes on the driver: on a second
+    construction in the session, at most the pipeline's three jobs
+    (doc-id widening shuffle, posting broadcast, and the result stage
+    that feeds the bounded edge collect) — the round loop ran 12."""
+    from conftest import SF_ORACLE
+
+    import __spark_entry__
+
+    fn = __spark_entry__.queries()["dedup_cluster_assign_star"]
+    fn(spark, SF_ORACLE)
+    sc = spark.sparkContext
+    group = "test_star_cc_second_construction"
+    sc.setJobGroup(group, group)
+    try:
+        df = fn(spark, SF_ORACLE)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 3, len(jobs)
+    assert "LocalRelation" in str(df._jdf.queryExecution().optimizedPlan())
 
 
 def test_recursive_spine_covers_every_day_once(spark, sf_dir):

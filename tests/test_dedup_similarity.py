@@ -531,10 +531,14 @@ def test_self_join_hint_gate_paths_agree(spark, monkeypatch):
     # gate selection: sf0.01 parquet is far below the gate → planner
     assert not gates.large("planner-trust", docs)
     # Catalyst cannot size a createDataFrame frame: it estimates
-    # Long.MaxValue and so takes the large side of every gate
+    # Long.MaxValue and so takes the large side of every strategy
+    # gate — but never of a refusal bound, which needs a known size
     local = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     assert gates.estimate(local) == (1 << 63) - 1
-    assert all(gates.large(g, local) for g in gates.THRESHOLDS)
+    assert all(
+        gates.large(g, local) != (g in gates.REFUSALS)
+        for g in gates.THRESHOLDS
+    )
 
     planner = _pairs(minhash_lsh_pairs(docs, "doc_id", "text", 3, 0.5))
     planner_j = _pairs(ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5))
@@ -1085,3 +1089,16 @@ def test_topk_arrow_pruned_path_matches_bnl(spark, monkeypatch):
     arrow = sorted(map(tuple, topk_similar(emb, probes, k=5).collect()))
     assert bnl == arrow
     assert len(bnl) == 5 * 5  # every probe returns k rows
+
+
+def test_exact_cosine_pairs_accepts_in_memory_frame(spark):
+    """An in-memory frame has no Catalyst size (Long.MaxValue). The
+    ``arrow-exact-max`` refusal raises only on a KNOWN size, so a
+    2-row frame returns its pair instead of being refused as corpus
+    scale."""
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    assert gates.estimate(emb) == (1 << 63) - 1
+    out = embedding_cosine_pairs(emb, "vec_id", "embedding", 0.9).collect()
+    assert [tuple(r) for r in out] == [(1, 2, 1.0)]

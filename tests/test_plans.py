@@ -747,3 +747,38 @@ def test_pq_plan_broadcasts_candidates_and_avoids_cartesian(
     assert "PythonUDF" not in plan  # small-side encoder is pure Catalyst
     # probe fan-out rides a literal explode, not a probe-table join
     assert plan.count("BroadcastHashJoin") == 1
+
+
+def _final_plan(df) -> str:
+    df.collect()  # the AQE final plan exists only after execution
+    return _plan(df).split("== Initial Plan ==")[0]
+
+
+def test_ngram_jaccard_pair_count_rides_the_join_partitioning(spark, sf_dir):
+    """Below planner-trust the posting join broadcasts one side, and
+    the corpus is widened by hash of the doc id, so the streamed side
+    already clusters the (id_a, id_b, …) pair-count aggregate: no
+    Exchange between the posting join and the aggregate."""
+    import __spark_entry__
+
+    plan = _final_plan(
+        __spark_entry__.queries()["dedup_ngram_jaccard"](spark, sf_dir)
+    )
+    agg_at = plan.index("functions=[count(1)]")
+    join_at = plan.index("HashJoin [_sh", agg_at)
+    assert "Exchange" not in plan[agg_at:join_at], plan
+
+
+def test_minhash_band_entries_computed_once(spark, sf_dir):
+    """Both sides of the band-entry self-join read ONE (band, bucket)
+    exchange: the 64-hash signatures are computed by one stage, and
+    the other join side reuses its output."""
+    import __spark_entry__
+
+    plan = _final_plan(
+        __spark_entry__.queries()["dedup_minhash_lsh"](spark, sf_dir)
+    )
+    band = "Exchange hashpartitioning(band"
+    lines = [ln for ln in plan.splitlines() if band in ln]
+    reused = [ln for ln in lines if "ReusedExchange" in ln]
+    assert len(lines) == 2 and len(reused) == 1, lines

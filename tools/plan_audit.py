@@ -46,6 +46,14 @@ other query constructs side-effect-free):
   including this audit's — is plan-only reads of the materialized
   tables.
 
+- the connected-components queries (`dedup_cluster_assign`,
+  `dedup_cluster_assign_star`, `dedup_survivors`,
+  `dedup_survivors_quality`) run their near-dup pair pipeline at
+  construction: the star scheme's edge list is checkpointed and
+  collected under a bound, labeled on the driver and returned as a
+  LocalRelation (operators/graph.py `connected_components_star`);
+  hash-min runs its sweep loop.
+
 It reports:
 
 - **multi-scan**: the same source table scanned more than once in one
@@ -148,13 +156,14 @@ MULTI_SCAN_JUSTIFIED: dict[str, tuple[dict[str, int], str]] = {
     ),
     "dedup_survivors_quality": (
         {"documents": 3},
-        "three DIFFERENT corpus projections, each feeding its own "
-        "shuffle: the shingle explode for pair generation, the "
+        "the pair generation runs at construction (its cluster labels "
+        "reach the plan as a LocalRelation), so the scans are the "
         "(doc_id, quality) projection the tiny cluster frame joins "
-        "for the argmax, and the full-width final keep — the "
-        "survivor set must exist before any row can be dropped (the "
-        "winsorized bound-first class), and checkpointing a shared "
-        "frame is the 100 TB trap (queries_analytics.py)",
+        "for the argmax — once for the loser branch, once for the "
+        "winner branch — and the full-width final keep: the survivor "
+        "set must exist before any row can be dropped (the winsorized "
+        "bound-first class), and checkpointing a shared frame is the "
+        "100 TB trap (queries_analytics.py)",
     ),
     "metric_view_curation": (
         {"documents": 2},
@@ -253,13 +262,17 @@ MULTI_SCAN_JUSTIFIED: dict[str, tuple[dict[str, int], str]] = {
     ),
     "dedup_minhash_lsh": (
         {"documents": 2},
-        "banded candidate self-join: signature relation referenced "
-        "twice (a × b) by definition",
+        "two different corpus projections: the band entries (one "
+        "(band, bucket) exchange, which both sides of the candidate "
+        "self-join reuse) and the hashed-shingle arrays the candidates "
+        "are verified against (operators/dedup.py "
+        "_banded_candidates_with_arrays)",
     ),
     "dedup_containment_lsh": (
         {"documents": 2},
         "same banded candidate self-join shape as dedup_minhash_lsh "
-        "(band relation a × b); only the verify arithmetic differs",
+        "(band entries + verify arrays); only the verify arithmetic "
+        "differs",
     ),
     "dedup_containment_prefix": (
         {"documents": 2},
