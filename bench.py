@@ -18,10 +18,10 @@ doesn't understate row-heavy queries DuckDB must materialize
 Methodology note (r5): each run constructs a FRESH DataFrame.
 Re-running an action on a RETAINED DataFrame object lets the DAG
 scheduler skip its already-computed shuffle map stages (same lineage →
-same shuffle IDs), which measured ``agg_percentile`` at 0.42 s when
-its honest fresh-lineage cost is ~1.15 s — a 3× flattering artifact,
-not a plan property. Fresh construction per run is what a user's
-repeated query actually pays.
+same shuffle IDs), which measures ``agg_percentile`` at 0.31 s when
+its fresh-lineage cost is 0.62 s (sf0.1, 4 cores, medians of 7) — a
+2× flattering artifact, not a plan property. Fresh construction per
+run is what a user's repeated query actually pays.
 
 ``value`` is the SEQUENTIAL warm total (comparable across rounds).
 Two extra measurements contextualize it (see BASELINE.md §3):
@@ -57,6 +57,8 @@ except OSError:  # platform without getloadavg
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
+#: The full result, rewritten by every run (git-ignored).
+LOCAL_OUT = os.path.join(REPO, "BENCH_LOCAL.json")
 
 from gaming_ai_analytics_spark.session import (  # noqa: E402
     codegen_compiles,
@@ -586,29 +588,14 @@ def main() -> None:
     # capture: the driver keeps only the last 2000 chars of stdout,
     # which truncated the r4 JSON to an unparseable tail — the on-disk
     # twin keeps every per-query table round-over-round comparable.
-    # Never let a write failure cost the stdout contract above.
+    # A write failure must not cost the stdout contract above, but it
+    # is reported.
     try:
-        with open(_local_out_path(), "w") as f:
+        with open(LOCAL_OUT, "w") as f:
             json.dump(out, f, indent=1)
             f.write("\n")
-    except OSError:
-        pass
-
-
-def _local_out_path() -> str:
-    """``BENCH_LOCAL_r{N}.json`` with N = the round the driver will
-    record next (one past the newest ``BENCH_r*.json`` it committed)."""
-    import glob
-    import re
-
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(REPO, "BENCH_r*.json"))
-        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-    ]
-    return os.path.join(
-        REPO, f"BENCH_LOCAL_r{max(rounds, default=0) + 1:02d}.json"
-    )
+    except OSError as e:
+        print(f"bench: could not write {LOCAL_OUT}: {e}", file=sys.stderr)
 
 
 def duck_sf1_child(sf1_dir: str, names: list[str] | None = None) -> None:

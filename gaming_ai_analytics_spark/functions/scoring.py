@@ -15,10 +15,10 @@ Our design:
   (Arrow-vectorized), never per-row;
 - deterministic local backends (lexicon sentiment, rule translator)
   for tests/oracles;
-- a remote-LLM backend **stub** that shows the batched-HTTP shape but
-  raises unless configured (no network in this environment);
-- remote-backed columns are marked nondeterministic and the pipeline
-  materializes them before any downstream use (SURVEY §7.3.1).
+- a backend that declares ``deterministic = False`` (a remote LLM,
+  one request per pandas batch) is marked nondeterministic, and the
+  pipeline materializes its columns before any downstream use
+  (SURVEY §7.3.1).
 
 Scoring rubric parity: integer scores in {-5..5} like the reference's
 prompt rubric (reviews_fact.py:17-25); sponsored half-weighting is pure
@@ -71,29 +71,6 @@ class LexiconScorer:
         return score.clip(SCORE_MIN, SCORE_MAX).where(
             filled.str.len() > 0, 0  # null/empty guard → 0 (reviews_fact.py:103-109)
         ).astype("int32")
-
-
-class RemoteLLMScorer:
-    """Batched remote-inference backend (the production path).
-
-    One HTTP POST per **pandas batch** (thousands of rows), not per
-    row — the fix for the reference's per-row call. Network isn't
-    available in this environment, so the transport is a stub; the
-    Spark-side plumbing (Arrow batching, partition-level fan-out,
-    nondeterminism handling) is the real design.
-    """
-
-    deterministic = False
-
-    def __init__(self, endpoint: str = "", batch_size: int = 4096):
-        self.endpoint = endpoint
-        self.batch_size = batch_size
-
-    def score_batch(self, texts: pd.Series) -> pd.Series:
-        raise NotImplementedError(
-            "remote LLM endpoint not configured in this environment; "
-            "use LexiconScorer for deterministic local scoring"
-        )
 
 
 def sentiment_expr(text_col: Column) -> Column:

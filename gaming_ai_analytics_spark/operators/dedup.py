@@ -65,12 +65,6 @@ def _self_join_hinter(df: DataFrame, strategy: str = "shuffle_hash"):
 # --------------------------------------------------------------------------
 # exact dedup
 # --------------------------------------------------------------------------
-def exact_dedup(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Exact duplicate removal (nondeterministic representative) —
-    ``dropDuplicates``: map-side partial dedup, then one shuffle."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
-
-
 def exact_dedup_canonical(
     df: DataFrame, key_col: str, text_col: str
 ) -> DataFrame:

@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gaming_ai_analytics_spark.operators.aggregates import (
-    bracket_exact_percentile,
     conditional_pct,
     duplicate_keys,
     median_exact,
@@ -443,46 +442,30 @@ register(
 
 
 def q_agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4 (semantic_layer.sql:91-93): exact median with interpolation,
-    strategy chosen per column by NDV regime.
+    """A4 (semantic_layer.sql:91-93): exact interpolated median per
+    group, as one plain plan — both columns through the Arrow kernel
+    :func:`median_exact`, so building the query runs no Spark job.
 
-    ``l_extendedprice`` has NDV ≈ row count, so the built-in
-    ``percentile``'s value→count partial state degenerates into the
-    raw column per group — fine at bench scale, the raw 100 TB column
-    on the reducers at cluster scale. It therefore routes through
-    :func:`bracket_exact_percentile` (sketch-bracket + exact slice,
-    two scans, driver holds O(|groups|·n/accuracy) values).
-    ``l_quantity`` (NDV = 50) keeps the built-in — its bounded
-    value→count map IS the right state — riding pass 1 of the same
-    aggregation as a companion, so the strategy split costs no extra
-    scan.
+    Measured on sf0.1 (4 cores, ``toPandas`` sink, fresh construction
+    per run, medians of 16 interleaved runs per arm, same rows from
+    every arm): this kernel 0.02 s construction + 0.61 s execution;
+    the built-in ``percentile`` 0.01 + 1.52 s; the driver-side
+    sketch-bracket operator it replaces 0.91 + 0.03 s, spent in the
+    4 jobs it ran while building.
 
-    Measured state per strategy (sf0.1: 600k rows, NDV 583k; the
-    sf1 scale-up replicates values, so NDV = rows/10): the built-in
-    carries the per-group value→count map — ~583k entries ≈ 10 MB at
-    sf0.1, and at 100 TB with NDV ~ 1e9 a ~16 GB reducer-side map =
-    OOM. The bracket path's engine state is the O(accuracy) KLL
-    sketch; the driver holds counts + bounds + the in-bracket slice
-    (measured 24.5k values/group at sf1 accuracy 1000, tracking the
-    8n/accuracy bound within ~2% across a 1k/10k/100k sweep —
-    BASELINE.md §3 r7 table). Wall-clock
-    (fresh-lineage A/B, median of 4, after the inline-CASE bracket
-    rewrite removed pass 2's broadcast join): sf0.1 1.07 s vs 1.15 s
-    built-in; sf1 0.98 s vs 0.84 s — the residual ~0.15 s is the
-    second full scan (bare scan+agg floor 0.31 s, partly overlapped),
-    the price of bounded state (decomposition in BASELINE.md §3).
-    ``accuracy`` trades sketch state for slice size (slice ≈ 8n/acc
-    rows): 1000 fits this fixture; scale it with n/group so the
-    collected slice stays within driver budget.
+    Scale: each ``l_linestatus`` group is gathered to one Python
+    worker, so the kernel runs on two workers here and its time grows
+    with rows. On 10× ``lineitem`` (6M rows, each of the 583k prices
+    10 times) it took 2.6 s against the bracket's 2.5 s and the
+    built-in's 1.8 s, whose value→count state grows with distinct
+    values, not rows. The bounded-state answer at 100 TB is
+    ``percentile_approx``, checked against the exact tier by
+    ``agg_scale_sketches``.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    return bracket_exact_percentile(
-        li,
-        ["l_linestatus"],
-        "l_extendedprice",
-        "median_price",
-        accuracy=1000,
-        companion_aggs=[median_exact("l_quantity").alias("median_qty")],
+    return li.groupBy("l_linestatus").agg(
+        median_exact("l_extendedprice").alias("median_price"),
+        median_exact("l_quantity").alias("median_qty"),
     )
 
 
@@ -1169,22 +1152,18 @@ def q_agg_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two passes by construction (a clip bound must exist before any
     row can be clipped): pass 1 computes exact interpolated p05/p95
     per group — the built-in ``percentile``, whose value→count state
-    degenerates on this NDV≈rows column at cluster scale exactly as
-    `agg_percentile` documents; at 100 TB the cut-point pass swaps to
-    :func:`bracket_exact_percentile` (one call per cut, bounded
-    state), the readout below is unchanged.  Pass 2 re-scans with the
-    cuts INLINED as CASE literals and aggregates clip/trim/count in
-    ONE codegen HashAggregate — the multi-scan is the operator's
-    semantics, not a plan accident (plan-audit justification).
+    degenerates on this NDV≈rows column at cluster scale.  Pass 2
+    re-scans with the cuts INLINED as CASE literals and aggregates
+    clip/trim/count in ONE codegen HashAggregate — the multi-scan is
+    the operator's semantics, not a plan accident (plan-audit
+    justification).
 
     The cut hand-off is a bounded driver merge (|groups| rows, two
-    doubles each — the `bracket_exact_percentile` driver-state
-    class), NOT a broadcast join: composing pass 2 as
+    doubles each), NOT a broadcast join: composing pass 2 as
     ``join(broadcast(cuts))`` measured 1.40–1.75 s at sf1 while the
     identical arms run standalone in 0.50 + 0.05 s — the broadcast
     subquery machinery re-costs the whole percentile stage — and the
-    inline-literal form runs at the sum of its parts (the exact
-    rewrite that fixed `agg_percentile` pass 2; A/B in
+    inline-literal form runs at the sum of its parts (A/B in
     BASELINE.md §3).
 
     Parity: comparisons against the interpolated cuts are safe —

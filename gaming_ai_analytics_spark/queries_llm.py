@@ -617,26 +617,6 @@ register(
 )
 
 
-def q_similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-5: k-means coarse quantizer + n_probe nearest cells
-    (scale tier; rows-only — recall vs the exact tier asserted in
-    tests and hash-checked via the ``_recall`` twin). Registered at
-    n_probe=8/16 cells — measured recall 0.96 (sf0.01) / 0.92 (sf0.1)
-    vs 0.84/0.72 at the n_probe=6 default, at no measurable cost on
-    the fixtures (the per-cell scan dominates under ~8 cells)."""
-    from gaming_ai_analytics_spark.operators.similarity import topk_similar_ivf
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return topk_similar_ivf(
-        emb, _probes(spark, sf_dir), k=_TOPK_K, n_probe=8
-    )
-
-
-# NOT registered since r7 — same retirement as the LSH tier above:
-# driver evidence rides the hash-checked ``similarity_topk_ivf_recall``
-# twin, which executes this exact operator against the exact tier.
-
-
 def _ann_recall_summary(
     exact: DataFrame, ann: DataFrame, floor: float
 ) -> DataFrame:

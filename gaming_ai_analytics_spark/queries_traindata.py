@@ -1856,8 +1856,7 @@ def q_inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the naive build ``collect_list(doc_id)`` per term is
     UNBOUNDED aggregate state — a stop-term's posting list is the
-    whole corpus in one reducer, the exact degenerate-state shape
-    `agg_percentile` exists to avoid. This plan never materializes a
+    whole corpus in one reducer. This plan never materializes a
     full list: ``row_number`` and the per-term document-frequency
     count ride ONE window exchange on the term key, the head filter
     (`rn ≤ 20`) bounds every downstream group to 20 rows BY
@@ -3041,25 +3040,24 @@ def q_mixture_bpe_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the per-source frame is the compression query's
     (the session's priced vocabulary, one broadcast-vocab corpus pass,
-    |sources|-key map-combined reduce), localCheckpointed because both the global
-    total and the output consume it — the materialized frame is
-    |sources| rows.  The mixture arithmetic is integer where it can
-    be (budgets, kept tokens) and 4dp-rounded where it can't (keep
-    rate), so both engines agree bit-for-bit."""
+    |sources|-key map-combined reduce).  The global total and source
+    count are whole-frame window aggregates over those |sources| rows,
+    so the frame is computed once and building the query runs no
+    job.  The mixture arithmetic is integer where it can be (budgets,
+    kept tokens) and 4dp-rounded where it can't (keep rate), so both
+    engines agree bit-for-bit."""
     per_src = (
         _priced_words(spark, sf_dir, _docs(spark, sf_dir), "source")
         .groupBy("source")
         .agg(F.sum("_n_tok").cast("long").alias("n_bpe_tokens"))
-        .localCheckpoint()
     )
-    tot = per_src.agg(
-        F.sum("n_bpe_tokens").alias("_tot"),
-        F.count(F.lit(1)).alias("_ns"),
-    )
-    target = F.floor(F.col("_tot") / F.col("_ns")).cast("long")
+    everything = Window.partitionBy()
+    target = F.floor(
+        F.sum("n_bpe_tokens").over(everything)
+        / F.count(F.lit(1)).over(everything)
+    ).cast("long")
     return (
-        per_src.crossJoin(F.broadcast(tot))
-        .select(
+        per_src.select(
             "source",
             "n_bpe_tokens",
             target.alias("target_tokens"),

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from gaming_ai_analytics_spark.operators.analytics import (
@@ -281,163 +282,91 @@ def test_connected_components_raises_when_not_converged(spark):
         connected_components(edges, max_iter=2)  # diameter 6 > 2
 
 
-def test_exact_percentiles_scalable_matches_builtin(spark):
-    """Gather-free exact percentile == the built-in on the fixture
-    (both strategies exercised: high-NDV price → bracket-slice,
-    50-value quantity → histogram), including the half-up rounding
-    knife edge that Python's banker's round gets wrong."""
-    from gaming_ai_analytics_spark.operators.aggregates import (
-        exact_percentiles_scalable,
-    )
-
-    li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
-    want = {
-        r.l_linestatus: (r.mp, r.mq)
-        for r in li.groupBy("l_linestatus")
-        .agg(
-            F.round(F.percentile("l_extendedprice", F.lit(0.5)), 2).alias("mp"),
-            F.round(F.percentile("l_quantity", F.lit(0.5)), 2).alias("mq"),
-        )
+def _builtin_median(df, group, value):
+    return {
+        r[0]: r[1]
+        for r in df.groupBy(group)
+        .agg(F.round(F.percentile(value, F.lit(0.5)), 2))
         .collect()
     }
-    got = {
-        r.l_linestatus: (r.median_price, r.median_qty)
-        for r in exact_percentiles_scalable(
-            li,
-            ["l_linestatus"],
-            {"median_price": "l_extendedprice", "median_qty": "l_quantity"},
-        ).collect()
+
+
+def _kernel_median(df, group, value):
+    from gaming_ai_analytics_spark.operators.aggregates import median_exact
+
+    return {
+        r[0]: r[1]
+        for r in df.groupBy(group).agg(median_exact(value)).collect()
     }
-    assert got == want
 
 
-def test_exact_percentiles_scalable_nulls_and_ties(spark):
-    """Ranks are over non-null values only; tie-heavy columns take the
-    histogram path; an all-null group yields NULL like F.percentile."""
-    from gaming_ai_analytics_spark.operators.aggregates import (
-        exact_percentiles_scalable,
-    )
+def test_median_exact_matches_builtin(spark):
+    """The Arrow median kernel == the built-in ``percentile`` on the
+    fixture's high-NDV price and 50-value quantity columns."""
+    from conftest import SF_ORACLE
 
+    li = spark.read.parquet(f"{SF_ORACLE}/lineitem.parquet")
+    for col in ("l_extendedprice", "l_quantity"):
+        want = _builtin_median(li, "l_linestatus", col)
+        assert _kernel_median(li, "l_linestatus", col) == want, col
+
+
+def test_median_exact_edge_groups(spark):
+    """Ranks over non-null values only; ties; an all-null group →
+    NULL; a one-value group; a NULL group key is a real group; 70
+    groups in one frame — each equal to the built-in."""
     rows = (
         [("a", v) for v in [1.0, 1.0, 1.0, 2.0, 2.0, 5.0, None, None]]
         + [("b", None)] * 3
         + [("c", 7.0)]
+        + [(None, v) for v in [10.0, 20.0, 30.0, 40.0]]
+        + [(f"g{i:02d}", float(j)) for i in range(66) for j in (1, 2, 9)]
     )
-    df = spark.createDataFrame(rows, ["g", "v"])
-    got = {
-        r.g: r.med
-        for r in exact_percentiles_scalable(
-            df, ["g"], {"med": "v"}, ndv_threshold=100
-        ).collect()
-    }
+    df = spark.createDataFrame(rows, "g STRING, v DOUBLE")
+    got = _kernel_median(df, "g", "v")
     # a: 6 non-null values [1,1,1,2,2,5] → rank 3.5 → (1+2)/2
-    assert got == {"a": 1.5, "b": None, "c": 7.0}
-
-
-def test_exact_percentiles_scalable_bracket_path_nulls(spark):
-    """Force the sketch-bracket strategy (ndv_threshold=0) and hit the
-    all-null group there too — the bracket is unusable and the group
-    must surface as NULL without breaking schema inference."""
-    from gaming_ai_analytics_spark.operators.aggregates import (
-        exact_percentiles_scalable,
-    )
-
-    rows = [("a", float(v)) for v in range(1, 8)] + [("b", None)] * 2
-    df = spark.createDataFrame(rows, ["g", "v"])
-    got = {
-        r.g: r.med
-        for r in exact_percentiles_scalable(
-            df, ["g"], {"med": "v"}, ndv_threshold=0
-        ).collect()
+    assert {k: got[k] for k in ("a", "b", "c", None)} == {
+        "a": 1.5, "b": None, "c": 7.0, None: 25.0,
     }
-    assert got == {"a": 4.0, "b": None}
+    assert all(got[f"g{i:02d}"] == 2.0 for i in range(66))
+    assert len(got) == 70
+    assert got == _builtin_median(df, "g", "v")
 
 
-def test_bracket_exact_percentile_matches_builtin_with_companion(spark):
-    """The two-scan high-NDV specialization == the built-in on the
-    fixture, with the low-NDV companion median riding pass 1; column
-    order and engine-side rounding preserved."""
-    from gaming_ai_analytics_spark.operators.aggregates import (
-        bracket_exact_percentile,
-        median_exact,
+def test_median_exact_knife_edges(spark):
+    """Two-value medians whose interpolation form decides a 2-dp
+    ROUND: Spark ``percentile`` and DuckDB ``quantile_cont`` compute
+    (1 − t)·lo + t·hi = −4.725000000000001 → −4.73 and −5.445 →
+    −5.45; the lerp lo + (hi − lo)·t and ``np.percentile`` land a
+    few ulps toward zero and round to −4.72 / −5.44."""
+    df = spark.createDataFrame(
+        [(1, -76.7423), (1, 67.2923), (2, -83.9954), (2, 73.1054)],
+        "g INT, v DOUBLE",
     )
-
-    li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
-    want = {
-        r.l_linestatus: (r.mp, r.mq)
-        for r in li.groupBy("l_linestatus")
-        .agg(
-            F.round(F.percentile("l_extendedprice", F.lit(0.5)), 2).alias("mp"),
-            F.round(F.percentile("l_quantity", F.lit(0.5)), 2).alias("mq"),
-        )
-        .collect()
-    }
-    out = bracket_exact_percentile(
-        li,
-        ["l_linestatus"],
-        "l_extendedprice",
-        "median_price",
-        companion_aggs=[median_exact("l_quantity").alias("median_qty")],
-    )
-    assert out.columns == ["l_linestatus", "median_price", "median_qty"]
-    got = {
-        r.l_linestatus: (r.median_price, r.median_qty)
-        for r in out.collect()
-    }
-    assert got == want
+    want = _builtin_median(df, "g", "v")
+    assert want == {1: -4.73, 2: -5.45}
+    assert _kernel_median(df, "g", "v") == want
 
 
-def test_bracket_exact_percentile_nulls_ties_and_tiny_accuracy(spark):
-    """Ranks over non-null values only; an all-null group surfaces as
-    NULL; a deliberately coarse sketch (accuracy=2, rank error 1/2)
-    exercises the widen-and-retry path without changing the answer."""
-    from gaming_ai_analytics_spark.operators.aggregates import (
-        bracket_exact_percentile,
-    )
+@pytest.mark.parametrize("name", ["agg_percentile", "mixture_bpe_budget"])
+def test_second_construction_runs_no_jobs(spark, name):
+    """Building these queries is plan-only: once the session's shared
+    prerequisites exist (the priced BPE vocabulary), a second
+    construction runs no Spark job."""
+    from conftest import SF_ORACLE
 
-    rows = (
-        [("a", v) for v in [1.0, 1.0, 1.0, 2.0, 2.0, 5.0, None, None]]
-        + [("b", None)] * 3
-        + [("c", 7.0)]
-        + [(None, v) for v in [10.0, 20.0, 30.0]]  # NULL group key is
-        # a real group — and its inline-CASE literal must be typed
-    )
-    df = spark.createDataFrame(rows, ["g", "v"])
-    for accuracy in (10_000, 2):
-        got = {
-            r.g: r.med
-            for r in bracket_exact_percentile(
-                df, ["g"], "v", "med", accuracy=accuracy
-            ).collect()
-        }
-        # a: 6 non-null values [1,1,1,2,2,5] → rank 3.5 → (1+2)/2
-        assert got == {"a": 1.5, "b": None, "c": 7.0, None: 20.0}, accuracy
+    import __spark_entry__
 
-
-def test_bracket_exact_percentile_null_key_wide_domain(spark):
-    """ADVICE r6 (medium): with MORE than 64 groups the operator takes
-    the broadcast-join path instead of inline CASE literals — a
-    null-UNSAFE equi-join there silently dropped any NULL-keyed group
-    (absent from pass 2 → emitted a NULL median despite a positive
-    count). Pin: 70 groups including a NULL key, both accuracies (the
-    coarse one additionally drives the widen/fallback path through the
-    same join)."""
-    from gaming_ai_analytics_spark.operators.aggregates import (
-        bracket_exact_percentile,
-    )
-
-    rows = [(f"g{i:02d}", float(j)) for i in range(69) for j in (1, 2, 9)]
-    rows += [(None, v) for v in [10.0, 20.0, 30.0, 40.0]]
-    df = spark.createDataFrame(rows, ["g", "v"])
-    for accuracy in (10_000, 2):
-        got = {
-            r.g: r.med
-            for r in bracket_exact_percentile(
-                df, ["g"], "v", "med", accuracy=accuracy
-            ).collect()
-        }
-        assert got[None] == 25.0, accuracy
-        assert all(got[f"g{i:02d}"] == 2.0 for i in range(69)), accuracy
+    fn = __spark_entry__.queries()[name]
+    fn(spark, SF_ORACLE)
+    sc = spark.sparkContext
+    group = f"test_second_construction_{name}"
+    sc.setJobGroup(group, group)
+    try:
+        fn(spark, SF_ORACLE)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 # --------------------------------------------------------------------------

@@ -67,11 +67,14 @@ def test_raising_tier_records_its_error(
     monkeypatch.setenv("SPARK_GRAFT_SETTLE", "0")
     monkeypatch.setattr(bench, "HEADLINE", ["agg_rollup"])
     monkeypatch.setattr(bench, "TIER2", ["no_such_query"])
-    monkeypatch.setattr(
-        bench, "_local_out_path", lambda: str(tmp_path / "bench.json")
-    )
+    # an unwritable result file warns on stderr; stdout still carries
+    # the JSON line
+    unwritable = tmp_path / "missing" / "bench.json"
+    monkeypatch.setattr(bench, "LOCAL_OUT", str(unwritable))
     bench.main()
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    captured = capsys.readouterr()
+    assert f"could not write {unwritable}" in captured.err
+    out = json.loads(captured.out.strip().splitlines()[-1])
     assert set(out["queries"]) == {"agg_rollup"}
     assert "tier2_queries" not in out
     assert out["tier2_error"].startswith("KeyError")

@@ -30,8 +30,7 @@ other query constructs side-effect-free):
   `bpe_fertility_by_lang`, `bpe_apply_saved_vocab`) train and persist
   the one priced vocabulary (queries_traindata.py `_priced_vocab`) on
   the FIRST construction per (session, sf_dir); later constructions
-  read the saved table.  `mixture_bpe_budget` also checkpoints its
-  |sources|-row per-source frame at construction.
+  read the saved table.
 - `traindata_curation_v2` / `curation_funnel_v2` /
   `traindata_curation_v2_incremental`: the FIRST construction per
   (process, sf_dir) runs the rule gate + ExactSubstr span-removal
@@ -426,6 +425,9 @@ UNPARTITIONED_WINDOW: dict[str, tuple[int, str, str]] = {
         "bounded",
         "split day (global max) over the |event types| x |days| daily "
         "frame",
+    ),
+    "mixture_bpe_budget": (
+        1, "bounded", "token total over the |sources|-row token counts",
     ),
     "mixture_rebalance": (
         1, "bounded", "corpus totals over the |sources|-row counts",
