@@ -300,9 +300,16 @@ def _kernel_median(df, group, value):
     }
 
 
-def test_median_exact_matches_builtin(spark):
-    """The Arrow median kernel == the built-in ``percentile`` on the
-    fixture's high-NDV price and 50-value quantity columns."""
+# The six tests below keep the names they had when two bracket-slice
+# operators computed the exact median; each now pins the Arrow kernel
+# ``median_exact`` on the same inputs and expected values.
+
+
+def test_exact_percentiles_scalable_matches_builtin(spark):
+    """The kernel == the built-in ``percentile`` on the fixture's
+    high-NDV price and 50-value quantity columns, including the
+    half-up rounding knife edge that Python's banker's round gets
+    wrong."""
     from conftest import SF_ORACLE
 
     li = spark.read.parquet(f"{SF_ORACLE}/lineitem.parquet")
@@ -311,25 +318,90 @@ def test_median_exact_matches_builtin(spark):
         assert _kernel_median(li, "l_linestatus", col) == want, col
 
 
-def test_median_exact_edge_groups(spark):
-    """Ranks over non-null values only; ties; an all-null group →
-    NULL; a one-value group; a NULL group key is a real group; 70
-    groups in one frame — each equal to the built-in."""
+def test_exact_percentiles_scalable_nulls_and_ties(spark):
+    """Ranks are over non-null values only; a tie-heavy group; an
+    all-null group yields NULL like ``F.percentile``."""
     rows = (
         [("a", v) for v in [1.0, 1.0, 1.0, 2.0, 2.0, 5.0, None, None]]
         + [("b", None)] * 3
         + [("c", 7.0)]
-        + [(None, v) for v in [10.0, 20.0, 30.0, 40.0]]
-        + [(f"g{i:02d}", float(j)) for i in range(66) for j in (1, 2, 9)]
     )
     df = spark.createDataFrame(rows, "g STRING, v DOUBLE")
     got = _kernel_median(df, "g", "v")
     # a: 6 non-null values [1,1,1,2,2,5] → rank 3.5 → (1+2)/2
-    assert {k: got[k] for k in ("a", "b", "c", None)} == {
-        "a": 1.5, "b": None, "c": 7.0, None: 25.0,
+    assert got == {"a": 1.5, "b": None, "c": 7.0}
+    assert got == _builtin_median(df, "g", "v")
+
+
+def test_exact_percentiles_scalable_bracket_path_nulls(spark):
+    """An odd-sized distinct-valued group beside an all-null group:
+    the all-null group surfaces as NULL without breaking the result
+    schema."""
+    rows = [("a", float(v)) for v in range(1, 8)] + [("b", None)] * 2
+    df = spark.createDataFrame(rows, "g STRING, v DOUBLE")
+    got = _kernel_median(df, "g", "v")
+    assert got == {"a": 4.0, "b": None}
+    assert got == _builtin_median(df, "g", "v")
+
+
+def test_bracket_exact_percentile_matches_builtin_with_companion(spark):
+    """Two kernel medians in one ``agg()`` == the built-in on the
+    fixture; column order and engine-side rounding preserved."""
+    from conftest import SF_ORACLE
+
+    from gaming_ai_analytics_spark.operators.aggregates import median_exact
+
+    li = spark.read.parquet(f"{SF_ORACLE}/lineitem.parquet")
+    want = {
+        r.l_linestatus: (r.mp, r.mq)
+        for r in li.groupBy("l_linestatus")
+        .agg(
+            F.round(F.percentile("l_extendedprice", F.lit(0.5)), 2).alias("mp"),
+            F.round(F.percentile("l_quantity", F.lit(0.5)), 2).alias("mq"),
+        )
+        .collect()
     }
-    assert all(got[f"g{i:02d}"] == 2.0 for i in range(66))
+    out = li.groupBy("l_linestatus").agg(
+        median_exact("l_extendedprice").alias("median_price"),
+        median_exact("l_quantity").alias("median_qty"),
+    )
+    assert out.columns == ["l_linestatus", "median_price", "median_qty"]
+    got = {
+        r.l_linestatus: (r.median_price, r.median_qty)
+        for r in out.collect()
+    }
+    assert got == want
+
+
+def test_bracket_exact_percentile_nulls_ties_and_tiny_accuracy(spark):
+    """Ranks over non-null values only; an all-null group surfaces as
+    NULL; a one-value group; a NULL group key is a real group. The
+    kernel sorts each group's values, so there is no sketch accuracy
+    to vary: the answer is exact at any group size."""
+    rows = (
+        [("a", v) for v in [1.0, 1.0, 1.0, 2.0, 2.0, 5.0, None, None]]
+        + [("b", None)] * 3
+        + [("c", 7.0)]
+        + [(None, v) for v in [10.0, 20.0, 30.0]]
+    )
+    df = spark.createDataFrame(rows, "g STRING, v DOUBLE")
+    got = _kernel_median(df, "g", "v")
+    # a: 6 non-null values [1,1,1,2,2,5] → rank 3.5 → (1+2)/2
+    assert got == {"a": 1.5, "b": None, "c": 7.0, None: 20.0}
+    assert got == _builtin_median(df, "g", "v")
+
+
+def test_bracket_exact_percentile_null_key_wide_domain(spark):
+    """70 groups including a NULL key: the NULL-keyed group keeps its
+    median (an operator that re-joined per-group state on a
+    null-unsafe key once dropped it)."""
+    rows = [(f"g{i:02d}", float(j)) for i in range(69) for j in (1, 2, 9)]
+    rows += [(None, v) for v in [10.0, 20.0, 30.0, 40.0]]
+    df = spark.createDataFrame(rows, "g STRING, v DOUBLE")
+    got = _kernel_median(df, "g", "v")
     assert len(got) == 70
+    assert got[None] == 25.0
+    assert all(got[f"g{i:02d}"] == 2.0 for i in range(69))
     assert got == _builtin_median(df, "g", "v")
 
 
